@@ -18,7 +18,7 @@ import sys
 import time
 
 from npm_mirror_spark.queries import QUERIES
-from npm_mirror_spark.session import get_spark
+from npm_mirror_spark.session import DEFAULT_CPUS, get_spark
 
 # Headline set: the flagship + one representative per operator family.
 HEADLINE = [
@@ -432,7 +432,7 @@ def main() -> None:
                 # verify the contract from the output alone, plus a content
                 # hash of this harness so any future bench.py drift is
                 # self-reporting instead of relying on an external diff.
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)),
                 "master": spark.sparkContext.master,
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "shuffle_partitions": int(

@@ -12,7 +12,9 @@ parquet table with a ``binary`` content column:
   test_multimodal.py);
 - GC is a declarative top-N-per-group + a compacting rewrite, with the
   evicted rows appended to the deletion log FIRST (log-then-delete, the
-  same ordering the reference uses at changes_consumer.py:209-216).
+  same ordering the reference uses at changes_consumer.py:209-216). The
+  log keeps each evicted ``version_seq``, so the store's committed set is
+  the kept rows plus the log (:meth:`ArtifactStore.committed_seqs`).
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from pyspark.sql import functions as F
 
 from npm_mirror_spark.operators.aggregates import retention_gc, retention_topn
 from npm_mirror_spark.operators.projections import prefix_bucket
+from npm_mirror_spark.sinks import path_exists
 
 VERSION_RETENTION_LIMIT = 5  # changes_consumer.py:25
 
@@ -41,24 +44,19 @@ class ArtifactStore:
         out = artifacts.withColumn("bucket", prefix_bucket("package"))
         out.write.mode("append").partitionBy("bucket").parquet(self.store_path)
 
-    def exists(self) -> bool:
-        """Genuine-absence probe (first-batch case); real read errors
-        propagate so a transient failure can't silently disable dedup."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(self.store_path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
-
-    def committed_seqs_from(self, min_seq: int) -> DataFrame:
-        """Committed version_seqs >= ``min_seq`` — the bounded anti-join
-        side that makes :meth:`append` callers replay-idempotent (same
-        seq-bounded pattern as pipeline.py's mirror dedup: the predicate
-        pushes to the scan, so row-group stats skip old files)."""
-        return (
-            self.read()
-            .select("version_seq")
-            .filter(F.col("version_seq") >= F.lit(min_seq))
-        )
+    def committed_seqs(self) -> DataFrame | None:
+        """Every version_seq the store ever accepted: the kept rows plus
+        the ones GC evicted to the deletion log. An evicted seq stays
+        committed, so a redelivery of its change is not stored (and
+        evicted and logged) a second time. None before the first append.
+        Bound it with ``sinks.drop_committed``: the seq filter pushes
+        through the union into both scans."""
+        if not path_exists(self.spark, self.store_path):
+            return None
+        seqs = self.read().select("version_seq")
+        if path_exists(self.spark, self.deletion_log_path):
+            seqs = seqs.unionByName(self.deletion_log().select("version_seq"))
+        return seqs
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.store_path)
@@ -96,6 +94,7 @@ class ArtifactStore:
             if n_evicted:
                 (
                     evicted.select(
+                        "version_seq",
                         F.col("save_path").alias("deleted_zip_path"),
                         F.current_timestamp().alias("deleted_at"),
                     )

@@ -20,6 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# cores assumed when SPARK_GRAFT_CPUS is unset (one local[32] JVM)
+DEFAULT_CPUS = "32"
+
 
 def get_spark(
     app_name: str = "npm-mirror-spark",
@@ -27,7 +30,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

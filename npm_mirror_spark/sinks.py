@@ -33,9 +33,13 @@ def write_bucketed_by_prefix(
     out.write.partitionBy("bucket").mode(mode).parquet(path)
 
 
-def append_log(df: DataFrame, path: str) -> None:
-    """Append-only log table (K4 deletion log / K2 stage logs)."""
-    df.write.mode("append").parquet(path)
+def path_exists(spark, path: str) -> bool:
+    """Existence probe for a sink's first-batch case. Only genuine absence
+    returns False; a present-but-unreadable table is left for the read to
+    fail on, so a transient error fails the batch (Spark retries it from
+    the checkpoint) instead of silently disabling dedup."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
 
 
 def upsert_latest(
@@ -50,7 +54,7 @@ def upsert_latest(
     """CouchDB-style upsert: the latest row per key WINS, replacing any
     previously-stored row (the reference's ``db.save`` overwrites by
     ``_id``, changes_consumer.py:325 — this is the true K3 semantics,
-    where ``write_deduped`` is the append-log upgrade).
+    where ``drop_committed`` is the append-log upgrade).
 
     100 TB shape: rewriting the whole table per batch is a non-starter, so
     rows live under the prefix-bucket partition layout and the merge uses
@@ -65,12 +69,9 @@ def upsert_latest(
     b = batch.withColumn("bucket", prefix_bucket(src, width))
     touched = [r["bucket"] for r in b.select("bucket").distinct().collect()]
     merged = b
-    try:
+    if path_exists(spark, path):
         existing = spark.read.parquet(path).filter(F.col("bucket").isin(touched))
         merged = b.unionByName(existing)
-    except Exception as e:  # noqa: BLE001 — absence only; re-raise the rest
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
     order = [F.desc(c) for c in order_cols]
     w = Window.partitionBy(key).orderBy(*order)
     latest = (
@@ -86,30 +87,26 @@ def upsert_latest(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode_was)
 
 
-def write_deduped(
-    df: DataFrame,
-    existing: DataFrame | None,
-    key: str,
-    path: str,
-    min_key=None,
-) -> None:
-    """Effectively-once append: in-batch dropDuplicates + anti-join against
-    the already-committed keys (K3 upgrade over the reference's
-    duplicate-happy db.save, changes_consumer.py:325).
+def drop_committed(
+    rows: DataFrame, committed: DataFrame | None, key: str, min_key
+) -> DataFrame:
+    """The rows whose ``key`` a sink has not yet committed: the
+    effectively-once half of the K3 upgrade over the reference's
+    duplicate-happy db.save (changes_consumer.py:325). ``rows`` are
+    already deduplicated within the batch; ``committed`` holds every key
+    the sink ever accepted, or is None for a sink not written yet.
 
-    Pass ``min_key`` (the batch's smallest key — exact, since a redelivered
-    row keeps its original key) to bound the committed side: the filter
-    pushes into the committed-keys scan so the anti-join input tracks the
-    redelivery window, not the sink's whole history. No broadcast hint —
-    AQE broadcasts small committed sets itself and a large one must be
-    allowed to shuffle instead of exhausting the driver."""
-    out = df.dropDuplicates([key])
-    if existing is not None:
-        committed = existing.select(key)
-        if min_key is not None:
-            committed = committed.filter(F.col(key) >= F.lit(min_key))
-        out = out.join(committed, key, "left_anti")
-    out.write.mode("append").parquet(path)
+    ``min_key`` is the batch's smallest key. A redelivered row keeps its
+    original key, so committed keys below it can never match, and the
+    bound is exact. It pushes into the committed-keys scan, so the
+    anti-join input tracks the redelivery window, not the sink's whole
+    history. No broadcast hint: AQE broadcasts small committed sets
+    itself, and a large one must be allowed to shuffle instead of
+    exhausting the driver."""
+    if committed is None or min_key is None:
+        return rows
+    bounded = committed.select(key).filter(F.col(key) >= F.lit(min_key))
+    return rows.join(bounded, key, "left_anti")
 
 
 def write_bucketed_table(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from npm_mirror_spark.operators.dedup import minhash_bands
+from npm_mirror_spark.sinks import path_exists
 
 
 class IncrementalDeduper:
@@ -59,14 +60,6 @@ class IncrementalDeduper:
         self.lsh_args = dict(
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
         )
-
-    # -- existence probes (genuine absence only; real errors propagate) --
-
-    def _exists(self, path: str) -> bool:
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(p))
 
     def accepted(self) -> DataFrame:
         return self.spark.read.parquet(self.accepted_path)
@@ -108,7 +101,7 @@ class IncrementalDeduper:
 
             # 2. probe the persistent index (stream-static equi join on the
             #    band key); any collision = near-dup of an accepted doc
-            if self._exists(self.index_path):
+            if path_exists(self.spark, self.index_path):
                 idx = self.index().select("band", "band_hash").distinct()
                 cross_losers = (
                     bands.join(idx, ["band", "band_hash"])
@@ -119,7 +112,7 @@ class IncrementalDeduper:
 
             # 3. replay guard: a checkpoint-recovered batch must not
             #    re-append docs already accepted (bounded: ids only)
-            if self._exists(self.accepted_path):
+            if path_exists(self.spark, self.accepted_path):
                 survivors = survivors.join(
                     self.accepted().select(id_col), id_col, "left_anti"
                 )
@@ -152,7 +145,7 @@ class IncrementalDeduper:
                 "left_semi",
             )
             to_index = accepted_bands
-            if self._exists(self.index_path):
+            if path_exists(self.spark, self.index_path):
                 to_index = to_index.join(
                     self.index().select(id_col, "band").distinct(),
                     [id_col, "band"],

@@ -12,14 +12,21 @@ micro-batch:
   13-field projection + db.save (L283)   mirror_record() -> parquet append
   5 log topics (L53-59,332-370)          per-stage dirs under out_dir/stages/
   commit after process (L408)            checkpointLocation (at-least-once)
-  duplicate rows on redelivery (L325)    seq-keyed dedup (intentional upgrade)
+  duplicate rows on redelivery (L325)    in-batch dropDuplicates + per-sink
+                                         sinks.drop_committed (upgrade)
+  zip store in prefix dirs (L95-125)     ArtifactStore.append (with_artifacts)
+  keep 5 versions, GC (L209-280, L25)    ArtifactStore.gc after the drain
+  deleted-zips db (L209-216)             deletion log, keyed by version_seq
   Prometheus counters (L38-42)           df.observe() + StreamingQueryListener
 
 Delivery semantics: the file/parquet sinks below are exactly-once per
 Spark's checkpoint contract; the explicit in-batch + cross-batch dedup on
 ``seq`` upgrades the reference's at-least-once duplicate-happy CouchDB sink
-(SURVEY.md §2.7). At scale the same code runs against Kafka in/out — the
-seams are the source reader and foreachBatch writer only.
+(SURVEY.md §2.7). A sink's committed set is every seq it ever accepted:
+the mirror's rows, and the artifact store's kept rows plus its deletion
+log, so a change redelivered after GC evicted its artifact is not stored
+again. At scale the same code runs against Kafka in/out — the seams are
+the source reader and foreachBatch writer only.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from npm_mirror_spark.operators.projections import mirror_record
+from npm_mirror_spark.sinks import drop_committed, path_exists
 from npm_mirror_spark.sources.changes import MAX_SIZE, read_changes_stream
 
 STAGES = (
@@ -99,34 +107,6 @@ class MirrorPipeline:
             .drop("stage")
         )
 
-    def _mirror_exists(self) -> bool:
-        """Explicit existence probe for the first-batch case. A catch-all
-        except around the read would silently DISABLE dedup on any
-        transient read failure (committing duplicates instead of failing
-        the batch) — so only genuine absence returns False; real read
-        errors propagate and fail the micro-batch, which Spark retries
-        from the checkpoint."""
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.mirror_path)
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(path))
-
-    def _committed_seqs_from(self, min_seq: int) -> DataFrame:
-        """Committed seqs that could possibly collide with a batch whose
-        smallest seq is ``min_seq``.
-
-        A redelivered change carries its original seq, so a committed seq
-        below the current batch's minimum can never match the anti-join —
-        filtering it out is exact, not heuristic. The predicate pushes to
-        the parquet scan (row-group stats skip old files), so the dedup
-        input is bounded by the source's redelivery window instead of
-        growing with the sink's whole history."""
-        return (
-            self.mirror_table()
-            .select("change_seq_id")
-            .filter(F.col("change_seq_id") >= F.lit(min_seq))
-        )
-
     # -- the foreachBatch writer -----------------------------------------
 
     def _write_batch(self, routed: DataFrame, batch_id: int) -> None:
@@ -134,7 +114,7 @@ class MirrorPipeline:
         every operator above is stream/batch pure, so this is the ONLY
         stream-specific code in the pipeline."""
         routed = routed.persist()
-        fresh = None
+        cached = None
         try:
             # stage logs (the 5 Kafka topics, K2): ONE partitioned write —
             # each stage becomes a partition dir, no per-stage job, no
@@ -149,44 +129,40 @@ class MirrorPipeline:
                 .parquet(self.stages_path)
             )
 
-            # mirror records: in-batch dedup on seq (redelivery inside a
-            # batch) + anti-join against already-committed seqs (redelivery
-            # across restarts) -> effectively-once rows. The committed side
-            # is seq-bounded (see _committed_seqs_from) and carries NO
-            # broadcast hint: small windows broadcast via AQE on their own,
-            # and a wide redelivery window legitimately falls back to a
-            # shuffled anti-join instead of blowing driver memory.
-            records = processed_mirror_records(routed).dropDuplicates(
+            # effectively-once rows: in-batch dedup on seq (redelivery
+            # inside a batch), then each sink drops the seqs it already
+            # committed (redelivery across restarts; sinks.drop_committed,
+            # bounded below by the batch's min seq). Both sinks derive from
+            # the same in-batch-deduped ``fresh`` rows, NOT the artifacts
+            # from the mirror-anti-joined ones: a crash after the mirror
+            # write but before the artifact append leaves the rows
+            # committed to the mirror, so the retried batch would anti-join
+            # them away and their artifacts would never be written.
+            fresh = processed_mirror_records(routed).dropDuplicates(
                 ["change_seq_id"]
             )
-            mirror_exists = self._mirror_exists()
-            if mirror_exists or self.artifact_store is not None:
+            store = self.artifact_store
+            mirror_seqs = (
+                self.mirror_table()
+                if path_exists(self.spark, self.mirror_path)
+                else None
+            )
+            store_seqs = store.committed_seqs() if store is not None else None
+            if mirror_seqs is not None or store is not None:
                 # cache only when a second consumer exists (min-agg below
                 # and/or the artifact projection) — an unconditional persist
                 # taxes the common fresh-sink fast path for nothing
-                fresh = records = records.persist()
-            if mirror_exists:
-                batch_min_seq = records.agg(F.min("change_seq_id")).first()[0]
-                if batch_min_seq is not None:
-                    records = records.join(
-                        self._committed_seqs_from(batch_min_seq),
-                        "change_seq_id",
-                        "left_anti",
-                    )
+                fresh = cached = fresh.persist()
+            min_seq = None
+            if mirror_seqs is not None or store_seqs is not None:
+                min_seq = fresh.agg(F.min("change_seq_id")).first()[0]
+            records = drop_committed(fresh, mirror_seqs, "change_seq_id", min_seq)
             records.write.mode("append").parquet(self.mirror_path)
 
             # K5: artifact rows ride into the bucketed store (content here
             # is the change's own digest surrogate — the enrichment seam
             # supplies real bytes in production).
-            #
-            # Independently idempotent: artifacts derive from ``fresh`` (the
-            # in-batch-deduped rows BEFORE the mirror anti-join) and anti-join
-            # the artifact store's OWN committed seqs. Deriving from the
-            # mirror-anti-joined ``records`` instead would lose rows on
-            # replay: a crash after the mirror write but before this append
-            # leaves the rows committed to the mirror, so the retried batch
-            # anti-joins them away and their artifacts are never written.
-            if self.artifact_store is not None:
+            if store is not None:
                 artifacts = fresh.select(
                     F.col("package_name").alias("package"),
                     F.col("change_seq_id").alias("version_seq"),
@@ -196,18 +172,10 @@ class MirrorPipeline:
                         F.col("package_latest_change_time"), F.current_timestamp()
                     ).alias("created_ts"),
                 )
-                if self.artifact_store.exists():
-                    amin = artifacts.agg(F.min("version_seq")).first()[0]
-                    if amin is not None:
-                        artifacts = artifacts.join(
-                            self.artifact_store.committed_seqs_from(amin),
-                            "version_seq",
-                            "left_anti",
-                        )
-                self.artifact_store.append(artifacts)
+                store.append(drop_committed(artifacts, store_seqs, "version_seq", min_seq))
         finally:
-            if fresh is not None:
-                fresh.unpersist()
+            if cached is not None:
+                cached.unpersist()
             routed.unpersist()
 
     # -- drive ------------------------------------------------------------

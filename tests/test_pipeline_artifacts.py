@@ -63,3 +63,66 @@ def test_pipeline_with_artifact_store(spark, tmp_path):
     # mirror and store agree on the surviving hot versions
     mirror_hot = p.mirror_table().filter(F.col("package_name") == "hotpackage")
     assert mirror_hot.count() == 9  # mirror keeps full history; store is GC'd
+
+
+def _hot_change(i):
+    v = f"1.{i}.0"
+    return {
+        "seq": 100_000 + i,
+        "id": "hotpackage",
+        "deleted": False,
+        "doc": {
+            "_id": "hotpackage",
+            "_rev": f"{i}-r",
+            "name": "hotpackage",
+            "dist_tags": {"latest": v},
+            "versions": {v: {"author": "a", "maintainers": None,
+                             "dependencies": None, "dist": None}},
+            "time": {"created": "2024-01-01T00:00:00",
+                     "modified": "2024-01-01T00:30:00",
+                     v: f"2024-01-0{i % 9 + 1}T12:00:00"},
+        },
+        "artifact_size": 1000,
+        "fetch_status": 200,
+    }
+
+
+def test_redelivery_after_gc_is_not_stored_again(spark, tmp_path):
+    """A change re-delivered after GC evicted its artifact is already
+    committed to the store: it must not be stored, evicted and logged a
+    second time. The store's committed set is its kept rows plus its
+    deletion log, not just what it still holds."""
+    from npm_mirror_spark.streaming.pipeline import route_changes
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    hot = [_hot_change(i) for i in range(9)]
+    with open(feed / "d0.jsonl", "w") as f:
+        for c in ch.generate_changes(n=40, seed=5) + hot:
+            f.write(json.dumps(c) + "\n")
+    p = MirrorPipeline(spark, str(tmp_path / "out"), with_artifacts=True)
+    p.run_available_now(str(feed))
+
+    store = p.artifact_store
+    kept = {r[0] for r in store.read().filter(F.col("package") == "hotpackage")
+            .select("version_seq").collect()}
+    evicted = [c for c in hot if c["seq"] not in kept]
+    assert len(evicted) == 4
+    with open(feed / "d1.jsonl", "w") as f:  # second drain: a redelivery
+        f.write(json.dumps(evicted[0]) + "\n")
+    p.run_available_now(str(feed))
+
+    assert store.read().filter(F.col("package") == "hotpackage").count() == 5
+    hot_log = store.deletion_log().filter(
+        F.col("deleted_zip_path").contains("hotpackage")
+    )
+    assert hot_log.count() == 4
+    assert hot_log.select("version_seq").distinct().count() == 4
+    routed_ok = (
+        route_changes(ch.read_changes_batch(spark, str(feed)))
+        .filter(F.col("stage") == "added_to_db")
+        .select("seq")
+        .distinct()
+        .count()
+    )
+    assert store.read().count() + store.deletion_log().count() == routed_ok

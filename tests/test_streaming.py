@@ -143,19 +143,34 @@ def test_dedup_antijoin_is_seq_bounded(spark, fixture_jsonl, tmp_path):
     """The committed side of the cross-restart dedup must be bounded below
     by the batch's min seq — pushed into the parquet scan, so the anti-join
     input tracks the redelivery window, not the sink's whole history — and
-    the bound must be exact (a full re-drain still adds zero rows)."""
+    the bound must be exact (a full re-drain still adds zero rows). The
+    artifact store's committed side is its kept rows plus its deletion
+    log: the bound must reach both scans."""
     from npm_mirror_spark import plans
+    from npm_mirror_spark.sinks import drop_committed
 
     out = str(tmp_path / "out")
-    p = MirrorPipeline(spark, out)
+    p = MirrorPipeline(spark, out, with_artifacts=True)
     p.run_batch(fixture_jsonl)
+    store = p.artifact_store
+    assert store.gc(limit=1)[1] > 0  # evictions: the deletion log exists
 
-    pushed = " ".join(plans.pushed_filters(p._committed_seqs_from(12345)))
+    mirror = p.mirror_table()
+    pushed = " ".join(
+        plans.pushed_filters(drop_committed(mirror, mirror, "change_seq_id", 12345))
+    )
     assert "GreaterThanOrEqual(change_seq_id,12345" in pushed
+    stored = store.read()
+    pushed = plans.pushed_filters(
+        drop_committed(stored, store.committed_seqs(), "version_seq", 12345)
+    )
+    assert sum("GreaterThanOrEqual(version_seq,12345" in f for f in pushed) == 2
 
     before = p.mirror_table().count()
+    stored_before = store.read().count()
     p.run_batch(fixture_jsonl)  # 100% redelivery: min-seq bound keeps all
     assert p.mirror_table().count() == before
+    assert store.read().count() == stored_before  # evicted seqs stay out
 
 
 def test_mirror_read_failure_fails_batch_not_dedup(spark, fixture_jsonl, tmp_path):
