@@ -343,12 +343,11 @@ def main() -> None:
     # CacheManager holds strong refs, so a 200-face single-session sweep
     # accumulates dead cached blocks until GC pressure inflates the
     # LATER faces 4-6x over their isolated steady state (measured:
-    # q_kmeans 29.1 s in-bench vs 4.5-5.0 s via tools/stage_audit.py).
+    # q_kmeans 29.1 s in-bench vs 4.5-5.0 s timed in isolation).
     # Releasing the previous face's caches BETWEEN timed regions — the
-    # same per-face hygiene tools/full_sweep.py and tools/stage_audit.py
-    # already apply — restores steady-state timing.  The timed action is
-    # unchanged; every face still computes from parquet inside its own
-    # timed region.
+    # same per-face hygiene every tools/face.py subcommand applies —
+    # restores steady-state timing.  The timed action is unchanged; every
+    # face still computes from parquet inside its own timed region.
     timings: dict[str, float] = {}
     for name in HEADLINE:
         spark.catalog.clearCache()

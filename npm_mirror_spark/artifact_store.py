@@ -20,6 +20,7 @@ parquet table with a ``binary`` content column:
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,10 +38,25 @@ class ArtifactStore:
         self.root = root
         self.store_path = os.path.join(root, "artifacts")
         self.deletion_log_path = os.path.join(root, "deleted")
+        self.old_path = self.store_path + "__old"
+
+    def _recover(self) -> None:
+        """Finish a :meth:`gc` swap that crashed between or after its
+        renames, before anything reads or writes the store. A store
+        renamed aside with nothing in its place IS the store: rename it
+        back. An aside copy next to a live store is left over from a
+        finished swap: delete it."""
+        if not os.path.exists(self.old_path):
+            return
+        if os.path.exists(self.store_path):
+            shutil.rmtree(self.old_path)
+        else:
+            os.rename(self.old_path, self.store_path)
 
     def append(self, artifacts: DataFrame) -> None:
         """artifacts: (package, version_seq, save_path, content, created_ts).
         Bucketed by package prefix like the reference's dir scheme."""
+        self._recover()
         out = artifacts.withColumn("bucket", prefix_bucket("package"))
         out.write.mode("append").partitionBy("bucket").parquet(self.store_path)
 
@@ -51,6 +67,7 @@ class ArtifactStore:
         evicted and logged) a second time. None before the first append.
         Bound it with ``sinks.drop_committed``: the seq filter pushes
         through the union into both scans."""
+        self._recover()
         if not path_exists(self.spark, self.store_path):
             return None
         seqs = self.read().select("version_seq")
@@ -59,6 +76,7 @@ class ArtifactStore:
         return seqs
 
     def read(self) -> DataFrame:
+        self._recover()
         return self.spark.read.parquet(self.store_path)
 
     def deletion_log(self) -> DataFrame:
@@ -72,18 +90,13 @@ class ArtifactStore:
         Crash-safe swap: the rewrite lands in a temp dir, the live store is
         renamed ASIDE (never deleted first), the temp renamed into place,
         and only then is the old copy dropped — every crash point leaves a
-        full recoverable copy on disk (``__old`` if between the renames;
-        :meth:`gc` restores it on the next run). A real deployment swaps
-        this for a table format's atomic commit. No-op on an absent store.
+        full recoverable copy on disk, which :meth:`_recover` puts back in
+        place before the store's next use. A real deployment swaps this for
+        a table format's atomic commit. No-op on an absent store.
         """
-        old = self.store_path + "__old"
+        self._recover()
         if not os.path.exists(self.store_path):
-            if os.path.exists(old):
-                # crashed between the two renames last time: the aside copy
-                # IS the store — restore it and continue the pass
-                os.rename(old, self.store_path)
-            else:
-                return 0, 0  # nothing stored yet
+            return 0, 0  # nothing stored yet
         current = self.read().cache()
         try:
             order = [F.desc("created_ts"), F.desc("version_seq")]
@@ -109,11 +122,7 @@ class ArtifactStore:
         finally:
             current.unpersist()
 
-        import shutil
-
-        if os.path.exists(old):
-            shutil.rmtree(old)  # leftover aside copy from a prior crash
-        os.rename(self.store_path, old)
+        os.rename(self.store_path, self.old_path)
         os.rename(tmp, self.store_path)
-        shutil.rmtree(old)
+        shutil.rmtree(self.old_path)
         return n_kept, n_evicted

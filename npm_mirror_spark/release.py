@@ -65,10 +65,11 @@ def cut_decontaminate(
     (gate, shingle explode, span islands, rebuild join) into its own
     analyzed plan.  The measured wall here was ~95% driver time chewing
     the duplicated 88-scan tree (executor task-time 5.06 s vs 6.9 s
-    wall, tools/profile_face.py), so a cache alone (which keeps the
-    lineage in every consumer's plan) did not move it; truncation makes
-    every consumer read `Scan ExistingRDD`.  Values are deterministic
-    text algebra, so the materialized path is bit-identical."""
+    wall, summed from per-stage task metrics), so a cache alone (which
+    keeps the lineage in every consumer's plan) did not move it;
+    truncation makes every consumer read `Scan ExistingRDD`.  Values are
+    deterministic text algebra, so the materialized path is
+    bit-identical."""
     from npm_mirror_spark.operators.curation import (
         benchmark_shingles,
         cut_contaminated_spans,

@@ -86,6 +86,28 @@ def test_gc_recovers_from_crash_between_renames(spark, tmp_path):
     assert maxv <= 5
 
 
+def test_drain_after_crash_between_renames_keeps_stored_rows(spark, tmp_path):
+    """Crash between gc's renames, then a drain before the next gc: the
+    aside copy is still the store, so dedup sees every committed seq, the
+    new rows land next to the kept ones, and the next gc loses none."""
+    import os
+
+    store = ArtifactStore(spark, str(tmp_path / "store"))
+    store.append(_fake_artifacts(spark))
+    store.gc(limit=5)
+    os.rename(store.store_path, store.store_path + "__old")
+    committed = store.committed_seqs()
+    assert committed is not None and committed.count() == 6 * 9
+    new = _fake_artifacts(spark, n_pkgs=1, versions=1).withColumns(
+        {"package": F.lit("newpkg"), "version_seq": F.lit(100).cast("long")}
+    )
+    store.append(new)
+    store.gc(limit=5)
+    counts = {r["package"]: r["count"] for r in store.read().groupBy("package").count().collect()}
+    assert counts == {**{f"package{p}": 5 for p in range(6)}, "newpkg": 1}
+    assert not os.path.exists(store.store_path + "__old")
+
+
 # -- hypothesis property tests ------------------------------------------------
 
 

@@ -10,6 +10,8 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 import __spark_entry__ as entry
 from npm_mirror_spark.queries import ORACLES, QUERIES
 
@@ -277,3 +279,43 @@ def test_every_public_operator_function_is_referenced():
             if node.name not in refs:
                 dead.append(f"{Path(path).name}:{node.name}")
     assert not dead, f"public operator functions with zero references: {sorted(dead)}"
+
+
+def test_all_faces_lists_registered_then_staged():
+    """One lookup over every face: the registered ones first, in QUERIES
+    order, then the 50 staged ones, each with an oracle; no name twice."""
+    from npm_mirror_spark.registry import all_faces
+
+    faces = all_faces()
+    names = [n for n, _, _ in faces]
+    assert len(names) == len(set(names))
+    assert names[: len(QUERIES)] == list(QUERIES)
+    staged = faces[len(QUERIES):]
+    assert len(staged) == 50
+    assert all(sql for _, _, sql in staged), [n for n, _, sql in staged if not sql]
+
+
+def test_resolve_face_matches_registry():
+    from npm_mirror_spark.registry import resolve_face
+
+    for name in QUERIES:
+        q, sql = resolve_face(name)
+        assert q is QUERIES[name] and sql == ORACLES.get(name), name
+    with pytest.raises(KeyError):
+        resolve_face("q_no_such_face")
+
+
+def test_face_tool_checks_one_face(sf_dir):
+    """tools/face.py end to end, in its own process and session."""
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "face.py"), "check", "q_mirror_record", "--sf-dir", sf_dir],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "q_mirror_record: ok" in proc.stdout
