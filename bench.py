@@ -20,7 +20,8 @@ import time
 from npm_mirror_spark.queries import QUERIES
 from npm_mirror_spark.session import DEFAULT_CPUS, get_spark
 
-# Headline set: the flagship + one representative per operator family.
+# Headline set: the flagship + one representative per operator family,
+# then each later addition appended at the end (never reordered).
 HEADLINE = [
     "q_mirror_record",
     "q_scan_project",
@@ -42,7 +43,6 @@ HEADLINE = [
     "q_exact_percentiles",
     "q_region_rollup",
     "q_tpch_pricing",
-    # round 2: registered scale paths + new join/window/dedup surface
     "q_ivf_dup_pairs",
     "q_session_stats",
     "q_dedup_keepset",
@@ -52,7 +52,6 @@ HEADLINE = [
     "q_normalize",
     "q_cosine_topk_arrow",
     "q_heavy_hitters",
-    # round 2: corpus-curation + semantic-dedup + subquery-decorrelation
     "q_gopher_rules",
     "q_decontaminate",
     "q_redact_pii",
@@ -63,7 +62,6 @@ HEADLINE = [
     "q_chunk_tokens",
     "q_pack_blocks",
     "q_returned_item_revenue",
-    # round 2b: wider TPC-H surface, grouping sets, time series, stats
     "q_market_share",
     "q_supplier_part_count",
     "q_cube_counts",
@@ -83,21 +81,13 @@ HEADLINE = [
     "q_mad",
     "q_forecast_revenue",
     "q_customer_order_dist",
-]
-
-# r5 growth: the r4/r5 additions benched on top of the r2 58-query set.
-# The JSON line carries BOTH totals — "value" covers everything, and
-# "common58_sec" sums only the r2 set so round-over-round comparison
-# stays apples-to-apples (docs/BENCH_NOTES.md).
-HEADLINE_R5 = [
+    # ^ COMMON_58
     "q_cap_per_source",
     "q_source_overlap",
     "q_event_transitions",
     "q_variant_decode",
     "q_cluster_split",
     "q_edit_distance",
-    # late-r5 additions: compressed-index ANN, substring-dedup spans,
-    # and lexical ranked retrieval
     "q_ann_pq",
     "q_dup_spans",
     "q_bm25",
@@ -118,16 +108,7 @@ HEADLINE_R5 = [
     "q_corpus_report",
     "q_classifier_eval",
     "q_pr_curve",
-]
-COMMON_58 = list(HEADLINE)
-HEADLINE = HEADLINE + HEADLINE_R5
-# Frozen r5-final headline (58 + 26): "common84_sec" is the long-series
-# marker that gives r6+ a like-for-like on the trainers too; r6+ query
-# additions extend HEADLINE but never this list (docs/BENCH_NOTES.md).
-COMMON_84 = list(HEADLINE)
-
-# r6 additions: leakage audit, epoch shuffling, exact-replay sketches.
-HEADLINE_R6 = [
+    # ^ COMMON_84
     "q_contamination_report",
     "q_epoch_shuffle",
     "q_count_min",
@@ -140,11 +121,6 @@ HEADLINE_R6 = [
     "q_containment",
     "q_lang_margin",
     "q_binned_quantiles",
-]
-HEADLINE = HEADLINE + HEADLINE_R6
-
-# r7 additions: directed PageRank (dangling fold), release composition.
-HEADLINE_R7 = [
     "q_pagerank_directed",
     "q_release_cut",
     "q_zorder",
@@ -169,12 +145,6 @@ HEADLINE_R7 = [
     "q_seasonal_outliers",
     "q_weighted_median",
     "q_source_gini",
-]
-HEADLINE = HEADLINE + HEADLINE_R7
-
-# r8 additions: graph estimators/communities, validation-audit tier,
-# libm-free two-sample statistics, boundary-sweep coverage, skyline.
-HEADLINE_R8 = [
     "q_triangle_est",
     "q_communities",
     "q_validated_batch",
@@ -199,29 +169,13 @@ HEADLINE_R8 = [
     "q_simpson",
     "q_fd_violations",
     "q_skyline",
-]
-HEADLINE = HEADLINE + HEADLINE_R8
-# Frozen r8-final headline (144 queries): "common_r8_sec" is the modern
-# like-for-like window for r9+ — common-58/84 are r2/r5-era and no longer
-# span most of the registry.  r9+ additions extend HEADLINE but never
-# this list (r8 verdict item 7; docs/BENCH_NOTES.md).
-COMMON_R8 = list(HEADLINE)
-
-# r9 additions: the five wired stat/audit operators (r8 verdict item 2)
-# plus the depth-2 FastSS fuzzy join.
-HEADLINE_R9 = [
+    # ^ COMMON_R8
     "q_spearman",
     "q_runs_test",
     "q_mann_kendall",
     "q_kanonymity",
     "q_chisq",
     "q_edit2_join",
-]
-HEADLINE = HEADLINE + HEADLINE_R9
-
-# r10 additions: robust/agreement stats, leakage-safe split, two-pass
-# heavy hitters, paired-classifier McNemar.
-HEADLINE_R10 = [
     "q_theilsen",
     "q_kappa",
     "q_cochran_armitage",
@@ -229,12 +183,6 @@ HEADLINE_R10 = [
     "q_leakage_split",
     "q_hh_twopass",
     "q_mcnemar",
-]
-HEADLINE = HEADLINE + HEADLINE_R10
-
-# r10 late batch: k-sample/parametric stats, graph tier 2, PPS
-# sampling, lexical diversity.
-HEADLINE_R10B = [
     "q_welch_t",
     "q_kruskal",
     "q_kendall_tau",
@@ -248,13 +196,6 @@ HEADLINE_R10B = [
     "q_poisson_bootstrap",
     "q_gini_split",
     "q_changepoint",
-]
-HEADLINE = HEADLINE + HEADLINE_R10B
-
-# r12 registrations: the r11-staged batch (faces_r12.py), lifted into
-# the registry this round — blocked/ordinal stats, survival cells,
-# vocab folds, the dedup recall audit and the Hilbert layout audit.
-HEADLINE_R12 = [
     "q_friedman",
     "q_brown_forsythe",
     "q_jonckheere",
@@ -268,7 +209,14 @@ HEADLINE_R12 = [
     "q_capture_recapture",
     "q_hilbert_audit",
 ]
-HEADLINE = HEADLINE + HEADLINE_R12
+
+# Frozen like-for-like windows, each a HEADLINE prefix later additions never
+# change: the JSON line's "value" covers all of HEADLINE, "common58_sec"
+# the r2 set, "common84_sec" the r5-final set (the trainers too) and
+# "common_r8_sec" the r8-final set (docs/BENCH_NOTES.md).
+COMMON_58 = HEADLINE[:58]
+COMMON_84 = HEADLINE[:84]
+COMMON_R8 = HEADLINE[:144]
 
 
 # Throttle-control probe (frozen): five pure projections whose code and

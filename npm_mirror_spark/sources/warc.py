@@ -336,7 +336,6 @@ def _warc_datasource_classes():
         DataSourceReader,
         DataSourceStreamReader,
         InputPartition,
-        SimpleDataSourceStreamReader,
     )
 
     class _WarcShard(InputPartition):
@@ -385,14 +384,13 @@ def _warc_datasource_classes():
         return sorted(glob.glob(pattern, recursive=True))
 
     class WarcPartitionStreamReader(DataSourceStreamReader):
-        """EXECUTOR-SIDE continuous shard ingest — the production
-        stream path (default).  Same offset model as the Simple reader
-        below (lexicographic shard-path high-water mark, O(1) forever),
-        but micro-batches are planned as one _WarcShard InputPartition
-        per new shard, so shard BYTES are opened and parsed on
-        executors — the driver only ever lists paths.  This matches the
-        batch reader's _WarcShard grain and removes the Simple reader's
-        driver-prefetch-and-pickle volume (the r5 verdict's item #3)."""
+        """EXECUTOR-SIDE continuous shard ingest.  The offset is a
+        lexicographic shard-path high-water mark ({"last": <path>},
+        O(1) forever; new shards must sort after old ones — Common
+        Crawl naming does, date-prefixed names do).  Micro-batches are
+        planned as one _WarcShard InputPartition per new shard, so
+        shard BYTES are opened and parsed on executors — the driver
+        only ever lists paths, the batch reader's _WarcShard grain."""
 
         def __init__(self, options):
             self.path = options.get("path")
@@ -424,50 +422,6 @@ def _warc_datasource_classes():
         def commit(self, end):
             pass
 
-    class WarcStreamReader(SimpleDataSourceStreamReader):
-        """Driver-prefetch twin of WarcPartitionStreamReader, kept for
-        the fixture-scale face (option simpleReader=true): the
-        SimpleDataSourceStreamReader contract prefetches each
-        micro-batch on the DRIVER and pickles it to executors —
-        acceptable only when micro-batches are small by contract.
-        Offset model identical ({"last": <path>} high-water mark; new
-        shards must sort after old ones — Common Crawl naming does;
-        date-prefixed names do).  readBetweenOffsets replays a
-        (start, end] range exactly, which is what makes restart
-        recovery exactly-once."""
-
-        def __init__(self, options):
-            self.path = options.get("path")
-            self.max_shard_bytes = _max_shard_bytes(options)
-            if not self.path:
-                raise ValueError("warc datasource requires a path")
-
-        def initialOffset(self):
-            return {"last": ""}
-
-        def _rows(self, files):
-            # materialized list, not a generator: the Simple stream
-            # reader prefetches on the driver and PICKLES the batch to
-            # executors — acceptable because micro-batches are shard-
-            # sized by contract; a driver-unpicklable volume belongs on
-            # WarcPartitionStreamReader (the default)
-            out = []
-            for fp in files:
-                out.extend(_shard_tuples(fp, self.max_shard_bytes))
-            return out
-
-        def read(self, start):
-            files = [p for p in _list_shards(self.path) if p > start["last"]]
-            end = {"last": files[-1] if files else start["last"]}
-            return iter(self._rows(files)), end
-
-        def readBetweenOffsets(self, start, end):
-            files = [
-                p for p in _list_shards(self.path)
-                if start["last"] < p <= end["last"]
-            ]
-            return self._rows(files)
-
     class WarcDataSource(DataSource):
         @classmethod
         def name(cls):
@@ -480,20 +434,7 @@ def _warc_datasource_classes():
             return WarcReader(self.options)
 
         def streamReader(self, schema):
-            # default: executor-side partition-planning reader.  With
-            # option simpleReader=true, defer to simpleStreamReader()
-            # via the engine's NotImplemented fallback protocol.
-            if str(self.options.get("simplereader", "")).lower() == "true":
-                from pyspark.errors import PySparkNotImplementedError
-
-                raise PySparkNotImplementedError(
-                    errorClass="NOT_IMPLEMENTED",
-                    messageParameters={"feature": "streamReader"},
-                )
             return WarcPartitionStreamReader(self.options)
-
-        def simpleStreamReader(self, schema):
-            return WarcStreamReader(self.options)
 
     return WarcDataSource
 
@@ -504,9 +445,8 @@ def register_warc_datasource(spark: SparkSession) -> None:
     production would list via the object store's SDK).  The streaming
     face tracks a lexicographic shard high-water mark — new shards must
     sort after old ones (date-prefixed names satisfy this) — and plans
-    one executor-read partition per shard by default; option
-    ``simpleReader=true`` selects the driver-prefetch Simple reader.
-    Option ``maxShardBytes=N`` (batch + both stream faces) turns an
+    one executor-read partition per shard.
+    Option ``maxShardBytes=N`` (batch and stream) turns an
     oversize shard into the routable F9 ValueError instead of an
     executor OOM."""
     spark.dataSource.register(_warc_datasource_classes())

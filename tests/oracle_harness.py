@@ -120,3 +120,57 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
             f"spark sample={diff_s[:3]} duckdb sample={diff_d[:3]}"
         )
     return problems
+
+
+# ------------------------------------------ per-batch family-face checks
+
+
+def registration_problems(names: list[str]) -> list[str]:
+    """Each family face in ``names`` must be registered in
+    ``queries.QUERIES`` as its family-table callable, with the entry's
+    resolved oracle in ``queries.ORACLES``."""
+    from npm_mirror_spark import faces
+    from npm_mirror_spark.queries import ORACLES, QUERIES
+
+    entries = {e.name: e for e in faces.table()}
+    problems = []
+    for n in names:
+        e = entries[n]
+        sql = e.oracle(ORACLES) if callable(e.oracle) else e.oracle
+        if e.staged or QUERIES.get(n) is not e.face:
+            problems.append(f"{n} registered with a different callable")
+        elif ORACLES.get(n) != sql:
+            problems.append(f"{n} oracle drifted")
+    return problems
+
+
+def plan_problems(spark, sf_dir: str, names: list[str]) -> list[str]:
+    """No CartesianProduct in any face of ``names``, and a
+    BroadcastNestedLoopJoin only in faces on ``test_plans.ALLOWED_BNLJ``."""
+    from npm_mirror_spark import plans
+    from npm_mirror_spark.registry import resolve_face
+    from tests.test_plans import ALLOWED_BNLJ
+
+    problems = []
+    for n in names:
+        text = plans.explain_str(resolve_face(n)[0](spark, sf_dir), "simple")
+        if "CartesianProduct" in text:
+            problems.append(f"{n}: cartesian product")
+        if "BroadcastNestedLoopJoin" in text and n not in ALLOWED_BNLJ:
+            problems.append(f"{n}: BNLJ not on ALLOWED_BNLJ")
+    return problems
+
+
+def unhashable_columns(spark, sf_dir: str, names: list[str]) -> list[str]:
+    """Decimal, array or map output columns of the faces in ``names``
+    (the driver cannot hash-compare them)."""
+    from pyspark.sql.types import ArrayType, DecimalType, MapType
+
+    from npm_mirror_spark.registry import resolve_face
+
+    return [
+        f"{n}.{f.name}"
+        for n in names
+        for f in resolve_face(n)[0](spark, sf_dir).schema.fields
+        if isinstance(f.dataType, (DecimalType, ArrayType, MapType))
+    ]

@@ -1,16 +1,19 @@
-"""The main correctness gate, locally: every oracle-backed query must match
-DuckDB exactly; oracle-less queries must at least run and return a stable
-schema."""
+"""The main correctness gate, locally: every oracle-backed face, registered
+or staged (``registry.all_faces()``), must match DuckDB exactly;
+oracle-less faces must at least run and return a stable schema."""
 
 from __future__ import annotations
 
 import pytest
 
+from npm_mirror_spark.faces import ORDER
 from npm_mirror_spark.queries import ORACLES, QUERIES
+from npm_mirror_spark.registry import all_faces
 from tests.oracle_harness import compare, duckdb_con
 
-ORACLE_BACKED = sorted(ORACLES)
-ROWS_ONLY = sorted(set(QUERIES) - set(ORACLES))
+FACES = {name: (q, sql) for name, q, sql in all_faces()}
+ORACLE_BACKED = sorted(n for n, (_, sql) in FACES.items() if sql)
+ROWS_ONLY = sorted(n for n, (_, sql) in FACES.items() if not sql)
 
 
 @pytest.fixture(scope="module")
@@ -22,14 +25,17 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("qname", ORACLE_BACKED)
 def test_oracle_parity(spark, sf_dir, con, qname):
-    df = QUERIES[qname](spark, sf_dir)
-    problems = compare(df, con, ORACLES[qname])
+    q, sql = FACES[qname]
+    problems = compare(q(spark, sf_dir), con, sql)
     assert not problems, f"{qname}: " + "; ".join(problems)
+    if qname in ORDER:
+        # a family face must not match its oracle on an empty result
+        assert con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0] > 0, qname
 
 
 @pytest.mark.parametrize("qname", ROWS_ONLY)
 def test_rows_only_queries_run(spark, sf_dir, qname):
-    df = QUERIES[qname](spark, sf_dir)
+    df = FACES[qname][0](spark, sf_dir)
     # stable schema + non-negative row count (the driver's weaker check)
     assert df.columns
     assert df.count() >= 0

@@ -274,9 +274,9 @@ def test_variant_decode_pure_projection(q):
 
 # Queries allowed to plan a BroadcastNestedLoopJoin, each with the reason
 # the plan stays BOUNDED at scale (broadcast side small by contract, or
-# an explicit size gate). Any registry query planning a BNLJ outside this
-# list fails the lint below — the reviewer must either fix the plan or
-# justify a new entry here.
+# an explicit size gate). Any face, registered or staged, planning a BNLJ
+# outside this list fails the lint below — the reviewer must either fix
+# the plan or justify a new entry here.
 ALLOWED_BNLJ = {
     "q_lag": "single-row max-date scalar broadcast to the fact side",
     "q_theilsen": (
@@ -451,7 +451,7 @@ ALLOWED_BNLJ = {
         "single-row (n_days, S, Q) totals broadcast onto the bounded "
         "day-axis prefix table (the q_cusum singleton-fold shape)"
     ),
-    # --- r12 batch (faces_r12.py): shapes pre-documented while staged ---
+    # --- registered family faces (npm_mirror_spark/faces/) ---
     "q_friedman": "1-row (k, n) completeness frame broadcast per treatment",
     "q_brown_forsythe": (
         "1-row grand-total fold broadcast (the q_anova_cells shape)"
@@ -478,7 +478,6 @@ ALLOWED_BNLJ = {
         "1-row min/max bounds frame broadcast for the integer coordinate "
         "scaling (the q_zorder range-stats shape)"
     ),
-    # --- r13 batch (staging_r13.py): shapes pre-documented while staged ---
     "q_page_trend": (
         "1-row (k, n) completeness frame broadcast per treatment (the "
         "q_friedman shape)"
@@ -509,7 +508,6 @@ ALLOWED_BNLJ = {
         "inherited from the allowlisted q_cosine_topk / q_ann_recall "
         "shape its exact arm reuses"
     ),
-    # --- r14 batch (staging_r14.py): shapes pre-documented while staged ---
     "q_somers_d": (
         "zero-filled (prio x line-count) grid build + 1-row tie/meta "
         "folds (the q_gk_gamma bounded-grid class)"
@@ -534,6 +532,148 @@ ALLOWED_BNLJ = {
         "1-row group-total fold broadcast onto the bounded quantity axis "
         "+ _with_prior_sums' (min,max) stats row (the q_quantile_norm "
         "shape)"
+    ),
+    # --- staged faces (registry.all_faces()) ---
+    "q_kendall_w": (
+        "1-row k-frame broadcast onto the per-treatment fold + the 1-row "
+        "tie-sum fold (the q_friedman shape)"
+    ),
+    "q_icc": (
+        "two 1-row folds (subject moments, dropped count) broadcast (the "
+        "q_kappa shape)"
+    ),
+    "q_dixon": (
+        "1-row extremes frame broadcast back onto the day rows for the "
+        "conditional second-extreme fold (the q_benford 1-row-fold class)"
+    ),
+    "q_grubbs": (
+        "1-row (n, T, Q) totals broadcast onto the day rows (the "
+        "q_decay_counts anchor shape)"
+    ),
+    "q_rank_scale": (
+        "1-row (n1, n2) totals broadcast onto the bounded quantity axis + "
+        "_with_prior_sums' (min,max) stats row (the q_quantile_norm shape)"
+    ),
+    "q_gk_lambda": "four 1-row margin/meta folds broadcast (the q_kappa shape)",
+    "q_morans_i": (
+        "1-row (n, S1, S2) totals broadcast onto the lag-joined day pairs + "
+        "the 1-row pair fold (the q_decay_counts anchor shape)"
+    ),
+    "q_blomqvist_beta": (
+        "two 1-row doubled-median folds broadcast onto the rows (the "
+        "q_mood_median shape)"
+    ),
+    "q_kuiper": (
+        "1-row (n1, n2) totals broadcast onto the bounded value axis + "
+        "_with_prior_sums' (min,max) stats row (the q_ks_stat shape)"
+    ),
+    "q_krippendorff": (
+        "three 1-row folds (pair sums, dropped count, margin spectrum) "
+        "broadcast (the q_kappa shape)"
+    ),
+    "q_hodges_lehmann": (
+        "bounded (dA x dB) distinct-value difference grid + 1-row "
+        "pair-count/median folds (the q_gk_gamma bounded-grid class)"
+    ),
+    "q_cuzick": (
+        "1-row tie fold broadcast onto the rank fold + _with_prior_sums' "
+        "(min,max) stats row (the q_quantile_norm shape)"
+    ),
+    "q_cronbach": (
+        "1-row global-item-count frame broadcast for the completeness gate "
+        "+ three 1-row moment folds (the q_kappa shape)"
+    ),
+    "q_gwet_ac1": (
+        "three 1-row folds (pair sums, dropped count, margin spectrum) "
+        "broadcast (the q_krippendorff shape)"
+    ),
+    "q_tau_partial": (
+        "three ordinal_assoc_cells compositions — the q_somers_d "
+        "bounded-grid dominance class, x3, plus the final 1-row tau folds"
+    ),
+    "q_aligned_ranks": (
+        "1-row global-treatment-count frame broadcast for the completeness "
+        "gate + 1-row meta folds (the q_friedman shape) + "
+        "_with_prior_sums' (min,max) stats row"
+    ),
+    "q_robust_shape": (
+        "1-row totals broadcast onto the bounded value axis + "
+        "_with_prior_sums' (min,max) stats row (the q_quantile_norm shape)"
+    ),
+    "q_tukey_fences": (
+        "1-row quartile frame broadcast back onto the rows for the census "
+        "fold (the q_mood_median shape)"
+    ),
+    "q_footrule": (
+        "_with_prior_sums' (min,max) stats rows, one per axis (the "
+        "q_spearman shape)"
+    ),
+    "q_ndcg": (
+        "probes (vec_id<5, contract-small) broadcast to corpus — inherited "
+        "from the allowlisted q_cosine_topk / q_ann_ivf shapes its two "
+        "arms reuse"
+    ),
+    "q_rbo": (
+        "probes (vec_id<5, contract-small) broadcast to corpus — the same "
+        "q_cosine_topk / q_ann_ivf inherited shape"
+    ),
+    "q_weekday_anova": (
+        "1-row (n_total, grand-sum) totals broadcast onto the 7 weekday "
+        "groups (the q_anova_cells shape)"
+    ),
+    "q_rank_stability": (
+        "_with_prior_sums' (min,max) stats rows, one per axis (the "
+        "q_spearman shape)"
+    ),
+    "q_gk_tau": (
+        "1-row (N, sum n_c^2) totals broadcast onto the bounded x-category "
+        "rows (the q_anova_cells shape)"
+    ),
+    "q_variance_ratio": (
+        "1-row (s2_max, s2_min) fold broadcast onto the 7 weekday moment rows"
+    ),
+    "q_t_closeness": (
+        "bounded sensitive-domain grid: the 5-segment value frame (x 1-row "
+        "total) broadcast onto the 25 nation classes"
+    ),
+    "q_hoover_index": (
+        "1-row (n, T) totals broadcast onto the per-customer unit rows (the "
+        "runs_test_daily median-fold shape)"
+    ),
+    "q_rand_index": (
+        "three 1-row pair-count aggregates (cells, row margins, column "
+        "margins) broadcast-folded — the q_anova_cells 1-row shape, three "
+        "times"
+    ),
+    "q_dunn_pairs": (
+        "the k-row kruskal_cells frame self-paired on a bounded inequality "
+        "grid (k(k-1)/2 rows, broadcast) — plus the kruskal_cells "
+        "singleton-fold it inherits"
+    ),
+    "q_modularity": (
+        "1-row m fold + 1-row term-sum fold broadcast onto the community "
+        "rows (the q_anova_cells shape, twice)"
+    ),
+    "q_conductance": "1-row m fold broadcast onto the community rows",
+    "q_attr_assortativity": (
+        "three 1-row aggregates (edge/same counts, category masses) "
+        "broadcast-combined"
+    ),
+    "q_lift_gains": (
+        "1-row (N, P) totals broadcast onto the distinct-score prefix rows, "
+        "plus _with_prior_sums' (min,max) stats row (the q_spearman shape)"
+    ),
+    "q_lorenz": (
+        "1-row (N, T) totals broadcast onto the distinct-value prefix rows, "
+        "plus the same prior-sums stats row"
+    ),
+    "q_rich_club": (
+        "two 1-row conditional aggregates (per-k edge and node counts over "
+        "the literal threshold grid) broadcast-combined"
+    ),
+    "q_pacf": (
+        "the 3-row lag-literal frame broadcast onto the daily series for "
+        "the pair join, plus the 1-row totals fold"
     ),
 }
 
@@ -565,14 +705,17 @@ def test_metrics_windows_are_bucket_partitioned(spark):
 
 
 def test_no_unbounded_loop_join_anywhere_in_registry(spark, sf_dir):
-    """Registry-wide scale lint: NO query may plan a CartesianProduct —
+    """Registry-wide scale lint over every registered and staged face
+    (``registry.all_faces()``): NO face may plan a CartesianProduct —
     an all-pairs product is never the right answer at 100 TB — and a
     BroadcastNestedLoopJoin is legal ONLY for the allowlisted queries
     whose broadcast side is bounded by contract (scalar subqueries,
     probe sets, centroid tables). A new BNLJ anywhere else is treated as
     an accidental all-pairs plan until justified."""
+    from npm_mirror_spark.registry import all_faces
+
     cart, bnlj = [], []
-    for name, fn in QUERIES.items():
+    for name, fn, _ in all_faces():
         text = plans.explain_str(fn(spark, sf_dir), "simple")
         if "CartesianProduct" in text:
             cart.append(name)

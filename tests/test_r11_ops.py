@@ -1,15 +1,20 @@
-"""r11 operator batch: unit tests with hand-computed expectations for
-the faces_r12.py batch (staged in r11, REGISTERED in r12).  Their full
-oracle-parity drives now run in tests/test_oracle_parity.py like every
-other registered face, so this module keeps only the hand examples plus
-the registration-consistency check below."""
+"""r11 operator batch: unit tests with hand-computed expectations.  The
+faces built on these operators are oracle-checked with every other face
+in tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from npm_mirror_spark.faces_r12 import R12_ORACLES, R12_QUERIES
+from tests.oracle_harness import registration_problems
+
+# the r12 batch of family faces (npm_mirror_spark/faces/)
+R12_BATCH = [
+    "q_friedman", "q_brown_forsythe", "q_jonckheere", "q_durbin_watson",
+    "q_gk_gamma", "q_cochran_q", "q_vocab_coverage", "q_km_events",
+    "q_mood_median", "q_vocab_richness", "q_capture_recapture",
+]
 
 
 # ---------------------------------------------------------------- units
@@ -178,16 +183,11 @@ def test_km_cells_hand_example(spark):
 
 
 def test_r12_batch_is_registered_with_oracles():
-    """Every face in the r12 batch is in the registry with its oracle
-    (parity itself runs in test_oracle_parity.py); the batch dicts and
-    the registry must agree exactly, including the capture-recapture
-    oracle completed by build_oracles."""
-    from npm_mirror_spark.queries import ORACLES, QUERIES
-
-    assert set(R12_QUERIES) == set(R12_ORACLES)
-    for name, q in R12_QUERIES.items():
-        assert QUERIES[name] is q, f"{name} registered with a different callable"
-        assert ORACLES[name] == R12_ORACLES[name], f"{name} oracle drifted"
+    """Every face in the r12 batch is in the registry as its family-table
+    callable with its oracle, including the capture-recapture oracle that
+    nests a registered face's SQL (parity itself runs in
+    test_oracle_parity.py)."""
+    assert registration_problems(R12_BATCH) == []
 
 
 def test_mood_median_hand_example(spark):

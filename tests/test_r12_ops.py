@@ -1,52 +1,54 @@
-"""r12 operator batch: unit tests with hand-computed expectations plus
-full oracle-parity drives of the staged r13 faces (staging_r13.py) —
-the same harness comparison the registry faces get, run BEFORE these
-faces are ever registered (the r10 lesson: driver verification is the
-only unfakeable signal, so staged faces pre-clear the identical bar).
-Library hand examples for logrank_cells / mantel_haenszel_cells live in
-tests/test_r11_ops.py (the operators shipped in r11; the faces are
-r12's)."""
+"""r12 operator batch: unit tests with hand-computed expectations, plus
+the r13 batch of family faces checked as a batch: oracle parity,
+registration and plan shape.  Library hand examples for
+logrank_cells / mantel_haenszel_cells live in tests/test_r11_ops.py
+(the operators shipped in r11; the faces are r12's)."""
 
 from __future__ import annotations
 
 import pytest
 
-import npm_mirror_spark.queries  # noqa: F401  (completes STAGED_ORACLES
-# via build_oracles — q_mrr/q_ngram_novelty compose registry SQL)
-from npm_mirror_spark.staging_r13 import STAGED_ORACLES, STAGED_QUERIES
-from tests.oracle_harness import compare, duckdb_con
+from npm_mirror_spark.registry import resolve_face
+from tests.oracle_harness import (
+    compare,
+    duckdb_con,
+    plan_problems,
+    registration_problems,
+)
+
+# the r13 batch of family faces (npm_mirror_spark/faces/)
+R13_BATCH = [
+    "q_logrank", "q_mantel_haenszel", "q_page_trend", "q_pettitt",
+    "q_conover_scale", "q_digit_pref", "q_mrr", "q_ngram_novelty",
+    "q_quade", "q_cliff_delta", "q_hoeffding", "q_aalen_johansen",
+]
 
 
 # ------------------------------------------------------- oracle parity
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", sorted(R13_BATCH))
 def test_staged_face_matches_oracle(spark, sf_dir, name):
-    """Every staged r13 face must clear the registry-identical harness
-    bar (rows + schema + canonical values vs DuckDB) BEFORE it is ever
-    registered."""
-    con = duckdb_con(sf_dir)
-    df = STAGED_QUERIES[name](spark, sf_dir)
-    problems = compare(df, con, STAGED_ORACLES[name])
+    """Every r13 face clears the registry harness bar (rows + schema +
+    canonical values vs DuckDB) and returns at least one row."""
+    face, sql = resolve_face(name)
+    df = face(spark, sf_dir)
+    problems = compare(df, duckdb_con(sf_dir), sql)
     assert not problems, f"{name}: {problems}"
-
-
-def test_staged_faces_have_oracles_and_rows(spark, sf_dir):
-    assert set(STAGED_QUERIES) == set(STAGED_ORACLES)
-    for name, q in STAGED_QUERIES.items():
-        assert q(spark, sf_dir).count() > 0, f"{name} returned no rows"
+    assert df.count() > 0, f"{name} returned no rows"
 
 
 def test_r13_batch_is_registered_with_oracles():
-    """The r13 rotation lifted this batch into the registry (parity
-    itself runs in test_oracle_parity.py); the staged dicts and the
-    registry must agree exactly."""
-    from npm_mirror_spark.queries import ORACLES, QUERIES
+    """The r13 batch is in the registry as its family-table callables
+    with their resolved oracles (q_mrr / q_ngram_novelty nest registered
+    oracle SQL)."""
+    assert registration_problems(R13_BATCH) == []
 
-    assert set(STAGED_QUERIES) == set(STAGED_ORACLES)
-    for name, q in STAGED_QUERIES.items():
-        assert QUERIES[name] is q, f"{name} registered with a different callable"
-        assert ORACLES[name] == STAGED_ORACLES[name], f"{name} oracle drifted"
+
+def test_staged_plan_shapes_pre_cleared(spark, sf_dir):
+    """No CartesianProduct in the r13 batch, and a
+    BroadcastNestedLoopJoin only in faces on ALLOWED_BNLJ."""
+    assert plan_problems(spark, sf_dir, R13_BATCH) == []
 
 
 # ---------------------------------------------------------------- units
@@ -238,7 +240,7 @@ def test_ngram_novelty_within_doc_repeats_count_once(spark):
 def test_mrr_rank_semantics(spark, sf_dir):
     """rr must be exactly 1/rank for hits and 0 with rank 0 for misses;
     every probe appears exactly once."""
-    from npm_mirror_spark.staging_r13 import q_mrr
+    from npm_mirror_spark.faces.corpus import q_mrr
 
     rows = q_mrr(spark, sf_dir).collect()
     assert len(rows) == len({r["probe_id"] for r in rows}) == 5
@@ -335,34 +337,6 @@ def test_cliff_delta_brute_force_property(spark):
         "g string, x long",
     )
     assert cliff_delta_cells(same, "x", "g").collect()[0]["delta"] == 0.0
-
-
-def test_staged_plan_shapes_pre_cleared(spark, sf_dir):
-    """The registry plan lint (test_plans.py) only covers registered
-    faces; this pre-clears the staged batch to the SAME bar before the
-    r13 rotation: no CartesianProduct anywhere, and a
-    BroadcastNestedLoopJoin only in the faces the module docstring
-    documents with their future ALLOWED_BNLJ entries."""
-    from npm_mirror_spark import plans
-
-    documented_bnlj = {
-        "q_page_trend",
-        "q_quade",
-        "q_conover_scale",
-        "q_cliff_delta",
-        "q_digit_pref",
-        "q_mrr",  # the allowlisted q_cosine_topk probe-broadcast shape
-        "q_hoeffding",
-    }
-    cart, bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        text = plans.explain_str(fn(spark, sf_dir), "simple")
-        if "CartesianProduct" in text:
-            cart.append(name)
-        if "BroadcastNestedLoopJoin" in text and name not in documented_bnlj:
-            bnlj.append(name)
-    assert cart == [], f"cartesian products in staged faces: {cart}"
-    assert bnlj == [], f"undocumented BNLJ in staged faces: {bnlj}"
 
 
 def test_hoeffding_cells_brute_force(spark):

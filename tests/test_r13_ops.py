@@ -1,8 +1,6 @@
-"""r13 operator batch: unit tests with hand-computed expectations plus
-full oracle-parity drives of the staged r14 faces (staging_r14.py) —
-the same harness comparison the registry faces get, run BEFORE these
-faces are ever registered (the r10 lesson: driver verification is the
-only unfakeable signal, so staged faces pre-clear the identical bar)."""
+"""r13 operator batch: unit tests with hand-computed expectations, plus
+the r14 batch of family faces checked as a batch: oracle parity,
+registration, plan shape and driver-hashable output types."""
 
 from __future__ import annotations
 
@@ -11,79 +9,52 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-import npm_mirror_spark.queries  # noqa: F401  (import-order parity with
-# the registry harness; staging_r14's oracles are self-contained)
-from npm_mirror_spark.staging_r14 import STAGED_ORACLES, STAGED_QUERIES
-from tests.oracle_harness import compare, duckdb_con
+from npm_mirror_spark.registry import resolve_face
+from tests.oracle_harness import (
+    compare,
+    duckdb_con,
+    plan_problems,
+    registration_problems,
+    unhashable_columns,
+)
+
+# the r14 batch of family faces (npm_mirror_spark/faces/)
+R14_BATCH = [
+    "q_somers_d", "q_tau_c", "q_fleiss_kappa", "q_weighted_kappa",
+    "q_bowker", "q_signed_rank", "q_cvm2", "q_cox_stuart", "q_seasonal_mk",
+    "q_buishand", "q_nelson_aalen", "q_gehan", "q_yule_k",
+]
 
 
 # ------------------------------------------------------- oracle parity
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_QUERIES))
+@pytest.mark.parametrize("name", sorted(R14_BATCH))
 def test_staged_face_matches_oracle(spark, sf_dir, name):
-    """Every staged r14 face must clear the registry-identical harness
-    bar (rows + schema + canonical values vs DuckDB) BEFORE it is ever
-    registered."""
-    con = duckdb_con(sf_dir)
-    df = STAGED_QUERIES[name](spark, sf_dir)
-    problems = compare(df, con, STAGED_ORACLES[name])
+    """Every r14 face clears the registry harness bar (rows + schema +
+    canonical values vs DuckDB) and returns at least one row."""
+    face, sql = resolve_face(name)
+    df = face(spark, sf_dir)
+    problems = compare(df, duckdb_con(sf_dir), sql)
     assert not problems, f"{name}: {problems}"
-
-
-def test_staged_faces_have_oracles_and_rows(spark, sf_dir):
-    assert set(STAGED_QUERIES) == set(STAGED_ORACLES)
-    for name, q in STAGED_QUERIES.items():
-        assert q(spark, sf_dir).count() > 0, f"{name} returned no rows"
+    assert df.count() > 0, f"{name} returned no rows"
 
 
 def test_r14_batch_is_registered_with_oracles():
-    """The r14 rotation lifted this batch into the registry (parity
-    itself runs in test_oracle_parity.py); the staged dicts and the
-    registry must agree exactly."""
-    from npm_mirror_spark.queries import ORACLES, QUERIES
-
-    assert set(STAGED_QUERIES) == set(STAGED_ORACLES)
-    for name, q in STAGED_QUERIES.items():
-        assert QUERIES[name] is q, f"{name} registered with a different callable"
-        assert ORACLES[name] == STAGED_ORACLES[name], f"{name} oracle drifted"
+    """The r14 batch is in the registry as its family-table callables
+    with their oracles."""
+    assert registration_problems(R14_BATCH) == []
 
 
 def test_staged_faces_plan_lint(spark, sf_dir):
-    """No cartesian products anywhere; BNLJ only in the six faces the
-    staging docstring pre-documents (their ALLOWED_BNLJ entries land
-    with the r14 registration)."""
-    from npm_mirror_spark import plans
-
-    documented_bnlj = {
-        "q_somers_d",
-        "q_tau_c",
-        "q_fleiss_kappa",
-        "q_weighted_kappa",
-        "q_signed_rank",
-        "q_cvm2",
-    }
-    cart, bnlj = [], []
-    for name, fn in STAGED_QUERIES.items():
-        text = plans.explain_str(fn(spark, sf_dir), "simple")
-        if "CartesianProduct" in text:
-            cart.append(name)
-        if "BroadcastNestedLoopJoin" in text and name not in documented_bnlj:
-            bnlj.append(name)
-    assert cart == [], f"cartesian products in staged faces: {cart}"
-    assert bnlj == [], f"undocumented BNLJ in staged faces: {bnlj}"
+    """No cartesian products in the r14 batch; BNLJ only in faces on
+    ALLOWED_BNLJ."""
+    assert plan_problems(spark, sf_dir, R14_BATCH) == []
 
 
 def test_staged_faces_driver_hashable_types(spark, sf_dir):
     """No decimal/array/map output columns (the r9 driver-red lesson)."""
-    from pyspark.sql.types import ArrayType, DecimalType, MapType
-
-    offenders = []
-    for name, q in STAGED_QUERIES.items():
-        for f in q(spark, sf_dir).schema.fields:
-            if isinstance(f.dataType, (DecimalType, ArrayType, MapType)):
-                offenders.append(f"{name}.{f.name}")
-    assert offenders == [], offenders
+    assert unhashable_columns(spark, sf_dir, R14_BATCH) == []
 
 
 # --------------------------------------------- ordinal_assoc_cells
@@ -550,37 +521,7 @@ def test_bartels_rvn_oscillation_above_trend_below(spark):
     assert r_tr["nm_x4"] == (20 - 1) * 4
 
 
-# ------------------------------- early-staged r15 faces (staging_r15)
-
-
-def test_r15_staged_faces_match_oracles(spark, sf_dir):
-    """Every early-staged r15 face clears the registry-identical
-    harness bar, stays out of the registry, and plans BNLJ only in
-    the 1-row-fold / bounded-grid faces the staging module
-    pre-documents for the r15 registration."""
-    from npm_mirror_spark import plans
-    from npm_mirror_spark.queries import QUERIES
-    from npm_mirror_spark.staging_r15 import STAGED_ORACLES as O15
-    from npm_mirror_spark.staging_r15 import STAGED_QUERIES as Q15
-
-    documented_bnlj = {
-        "q_kendall_w", "q_icc", "q_dixon", "q_grubbs",
-        "q_rank_scale", "q_gk_lambda",
-        # the r14-staged batch (1-row folds / bounded grids; entries
-        # pre-documented in the staging_r15.py module comment)
-        "q_morans_i", "q_blomqvist_beta", "q_kuiper", "q_krippendorff",
-        "q_hodges_lehmann", "q_cuzick",
-    }
-    assert set(Q15) == set(O15) and not set(Q15) & set(QUERIES)
-    con = duckdb_con(sf_dir)
-    for name, q in Q15.items():
-        df = q(spark, sf_dir)
-        problems = compare(df, con, O15[name])
-        assert not problems, f"{name}: {problems}"
-        text = plans.explain_str(df, "simple")
-        assert "CartesianProduct" not in text, name
-        if name not in documented_bnlj:
-            assert "BroadcastNestedLoopJoin" not in text, name
+# ------------------------------- kendall_w / icc / outlier cells
 
 
 def test_kendall_w_hand_examples(spark):
@@ -685,11 +626,11 @@ def test_grubbs_empty_series_matches_oracle_degenerate(spark):
         for c in ("total", "sum_sq", "max_dev_xn", "at_day", "dev_sign")
     )
     # the oracle on an empty events view agrees cell-for-cell
-    from npm_mirror_spark.staging_r15 import STAGED_ORACLES
+    from npm_mirror_spark.registry import resolve_face
 
     con = duckdb.connect()
     con.execute("CREATE VIEW events AS SELECT CAST(NULL AS TIMESTAMP) AS ts WHERE FALSE")
-    orc = con.execute(STAGED_ORACLES["q_grubbs"]).fetchall()
+    orc = con.execute(resolve_face("q_grubbs")[1]).fetchall()
     assert len(orc) == 1
     assert orc[0][0] == 0 and all(v is None for v in orc[0][1:])
 

@@ -1,10 +1,8 @@
 """r14 continuation operator batch: unit tests with hand-computed
 expectations plus bit-exactness property adversaries for the eight
-operators staged into the r18 window tail (staging_r18.py) — records
-trend, longest-run census, Goodman-Kruskal tau, Hartley Fmax,
-t-closeness, Lin CCC, Hoover index, Adjusted Rand.  Oracle parity for
-the whole staged batch runs in the staged-sweep test at the bottom
-(the test_r14_ops.py staged-r16/r17 discipline)."""
+operators — records trend, longest-run census, Goodman-Kruskal tau,
+Hartley Fmax, t-closeness, Lin CCC, Hoover index, Adjusted Rand.  Oracle
+parity for their faces runs in tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -1239,71 +1237,3 @@ def test_pacf_bit_exact_vs_brute(spark, pts):
                 assert r["pacf3"] == (r3 - p21 * r2 - p2 * r1) / den3
     else:
         assert r["r1"] is None
-
-
-# ------------------------------- staged r19 faces (staging_r19)
-
-
-def test_r19_staged_faces_match_oracles(spark, sf_dir):
-    """The graph-quality staged batch clears the registry-identical
-    harness bar; the q_modularity / q_conductance oracles compose the
-    registry q_communities SQL (the build_oracles deferral)."""
-    from npm_mirror_spark import plans
-    from npm_mirror_spark.queries import ORACLES, QUERIES
-    from npm_mirror_spark.staging_r19 import (
-        STAGED_QUERIES as Q19,
-        build_oracles,
-    )
-    from tests.oracle_harness import compare, duckdb_con
-
-    O19 = build_oracles(ORACLES)
-    assert set(Q19) == set(O19) and not set(Q19) & set(QUERIES)
-    # BNLJ only in the faces whose shapes the module doc pre-documents
-    # (1-row folds, literal-grid folds, prior-sums stats rows)
-    documented_bnlj = {
-        "q_modularity", "q_conductance", "q_attr_assortativity",
-        "q_lift_gains", "q_lorenz", "q_rich_club", "q_pacf",
-    }
-    con = duckdb_con(sf_dir)
-    for name, q in Q19.items():
-        df = q(spark, sf_dir)
-        problems = compare(df, con, O19[name])
-        assert not problems, f"{name}: {problems}"
-        text = plans.explain_str(df, "simple")
-        assert "CartesianProduct" not in text, name
-        if name not in documented_bnlj:
-            assert "BroadcastNestedLoopJoin" not in text, name
-
-
-# ------------------------------- staged r18 faces (staging_r18)
-
-
-def test_r18_staged_faces_match_oracles(spark, sf_dir):
-    """The r14 continuation staged batch clears the registry-identical
-    harness bar; the q_rand_index oracle composes the registry
-    q_kmeans SQL (the q_mrr / q_ndcg deferral pattern)."""
-    from npm_mirror_spark import plans
-    from npm_mirror_spark.queries import ORACLES, QUERIES
-    from npm_mirror_spark.staging_r18 import (
-        STAGED_QUERIES as Q18,
-        build_oracles,
-    )
-    from tests.oracle_harness import compare, duckdb_con
-
-    O18 = build_oracles(ORACLES)
-    assert set(Q18) == set(O18) and not set(Q18) & set(QUERIES)
-    # BNLJ only in the faces whose shapes the module doc pre-documents
-    # (1-row folds, bounded sensitive-domain grid)
-    documented_bnlj = {
-        "q_rand_index", "q_gk_tau", "q_variance_ratio", "q_t_closeness",
-        "q_hoover_index", "q_dunn_pairs",
-    }
-    con = duckdb_con(sf_dir)
-    for name, q in Q18.items():
-        df = q(spark, sf_dir)
-        problems = compare(df, con, O18[name])
-        assert not problems, f"{name}: {problems}"
-        text = plans.explain_str(df, "simple")
-        assert "CartesianProduct" not in text, name
-        if name not in documented_bnlj:
-            assert "BroadcastNestedLoopJoin" not in text, name

@@ -1,9 +1,8 @@
 """r14 operator batch: unit tests with hand-computed expectations for
-the seven operators staged into the r15 window tail (staging_r15.py
-additions) — moment normality, lag autocorrelation cells, quadrant
-correlation, Kuiper, Krippendorff alpha, Hodges-Lehmann, Cuzick trend.
-Full oracle-parity drives run in test_r13_ops.py's staged-r15 sweep
-(the staged dicts are iterated dynamically)."""
+moment normality, lag autocorrelation cells, quadrant correlation,
+Kuiper, Krippendorff alpha, Hodges-Lehmann and Cuzick trend.  The faces
+built on these operators are oracle-checked with every other face in
+tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -504,47 +503,15 @@ def test_aligned_ranks_drops_incomplete_blocks(spark):
     assert out["t1"]["r_x2"] == 6.0
 
 
-# ------------------------------- staged r16 faces (staging_r16)
-
-
-def test_r16_staged_faces_match_oracles(spark, sf_dir):
-    """Every staged r16 face clears the registry-identical harness
-    bar, stays out of the registry, and plans BNLJ only in the
-    1-row-fold / bounded-grid faces the staging module pre-documents
-    for the r16 registration."""
-    from npm_mirror_spark import plans
-    from npm_mirror_spark.queries import QUERIES
-    from npm_mirror_spark.staging_r16 import STAGED_ORACLES as O16
-    from npm_mirror_spark.staging_r16 import STAGED_QUERIES as Q16
-    from tests.oracle_harness import compare, duckdb_con
-
-    documented_bnlj = {
-        "q_cronbach", "q_gwet_ac1", "q_tau_partial", "q_aligned_ranks",
-        "q_robust_shape", "q_tukey_fences", "q_footrule",
-    }
-    assert set(Q16) == set(O16) and not set(Q16) & set(QUERIES)
-    con = duckdb_con(sf_dir)
-    for name, q in Q16.items():
-        df = q(spark, sf_dir)
-        problems = compare(df, con, O16[name])
-        assert not problems, f"{name}: {problems}"
-        text = plans.explain_str(df, "simple")
-        assert "CartesianProduct" not in text, name
-        if name not in documented_bnlj:
-            assert "BroadcastNestedLoopJoin" not in text, name
-
-
 def test_r16_staged_faces_driver_hashable_types(spark, sf_dir):
-    from pyspark.sql.types import ArrayType, DecimalType, MapType
+    """The staged r16 batch emits no decimal/array/map output column."""
+    from tests.oracle_harness import unhashable_columns
 
-    from npm_mirror_spark.staging_r16 import STAGED_QUERIES as Q16
-
-    offenders = []
-    for name, q in Q16.items():
-        for f in q(spark, sf_dir).schema.fields:
-            if isinstance(f.dataType, (DecimalType, ArrayType, MapType)):
-                offenders.append(f"{name}.{f.name}")
-    assert offenders == [], offenders
+    batch = [
+        "q_cronbach", "q_gwet_ac1", "q_tau_partial", "q_aligned_ranks",
+        "q_yuen_trim", "q_robust_shape", "q_tukey_fences", "q_footrule",
+    ]
+    assert unhashable_columns(spark, sf_dir, batch) == []
 
 
 def test_ordinal_assoc_weighted_equals_raw(spark):
@@ -560,46 +527,16 @@ def test_ordinal_assoc_weighted_equals_raw(spark):
     assert tuple(a) == tuple(b)
 
 
-# ------------------------------- staged r17 faces (staging_r17)
-
-
-def test_r17_staged_faces_match_oracles(spark, sf_dir):
-    """The late-r14 staged batch (currently q_ndcg) clears the
-    registry-identical harness bar; its composed oracle builds against
-    the registry dict (the q_mrr deferral pattern)."""
-    from npm_mirror_spark import plans
-    from npm_mirror_spark.queries import ORACLES, QUERIES
-    from npm_mirror_spark.staging_r17 import (
-        STAGED_QUERIES as Q17,
-        build_oracles,
-    )
-    from tests.oracle_harness import compare, duckdb_con
-
-    O17 = build_oracles(ORACLES)
-    assert set(Q17) == set(O17) and not set(Q17) & set(QUERIES)
-    # BNLJ only in the faces whose shapes the module doc pre-documents
-    # (broadcast probes, 1-row folds, _with_prior_sums stats rows)
-    documented_bnlj = {
-        "q_ndcg", "q_rbo", "q_weekday_anova", "q_rank_stability",
-    }
-    con = duckdb_con(sf_dir)
-    for name, q in Q17.items():
-        df = q(spark, sf_dir)
-        problems = compare(df, con, O17[name])
-        assert not problems, f"{name}: {problems}"
-        text = plans.explain_str(df, "simple")
-        assert "CartesianProduct" not in text, name
-        if name not in documented_bnlj:
-            assert "BroadcastNestedLoopJoin" not in text, name
+# ------------------------------- q_ndcg / shift function
 
 
 def test_ndcg_bounds_and_perfect_prefix(spark, sf_dir):
     """Structure: every ndcg in [0, 1]; a probe whose IVF list equals
     the exact list position-for-position scores exactly 1.0; rel
     columns only take values {0, 1, 2, 3}."""
-    from npm_mirror_spark.staging_r17 import STAGED_QUERIES as Q17
+    from npm_mirror_spark.faces.corpus import q_ndcg
 
-    rows = Q17["q_ndcg"](spark, sf_dir).collect()
+    rows = q_ndcg(spark, sf_dir).collect()
     assert rows, "no probes"
     for r in rows:
         assert 0.0 <= r["ndcg"] <= 1.0

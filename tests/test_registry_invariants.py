@@ -156,7 +156,7 @@ _DRIVER_HASHABLE = (
 
 
 def test_no_decimal_output_faces(spark, sf_dir):
-    """No registered face may emit a DecimalType (or other non-driver-
+    """No face, registered or staged, may emit a DecimalType (or other non-driver-
     hashable) output column.  r9 went driver-red on q_rank_sum/q_ks_stat/
     q_cusum for type alone — the values were bit-identical in both
     engines, but the driver renders a Spark Decimal cell differently
@@ -165,17 +165,19 @@ def test_no_decimal_output_faces(spark, sf_dir):
     unrepresentable: decimal stays an internal accumulation type only."""
     from pyspark.sql.types import ArrayType, DecimalType, MapType
 
+    from npm_mirror_spark.registry import all_faces
+
     offenders: list[str] = []
-    for name, q in QUERIES.items():
+    for name, q, sql in all_faces():
         df = q(spark, sf_dir)
         for f in df.schema.fields:
             if isinstance(f.dataType, DecimalType):
                 offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-            elif name in ORACLES and isinstance(f.dataType, (ArrayType, MapType)):
+            elif sql and isinstance(f.dataType, (ArrayType, MapType)):
                 # rows-only faces may return arrays (never hash-compared);
                 # oracle-backed faces must stay scalar (r4 lesson)
                 offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-            elif name in ORACLES and f.dataType.simpleString() not in _DRIVER_HASHABLE:
+            elif sql and f.dataType.simpleString() not in _DRIVER_HASHABLE:
                 offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not offenders, (
         "faces with non-driver-hashable output columns (cast decimals to "
@@ -197,6 +199,8 @@ def test_cross_engine_output_type_families(spark, sf_dir):
 
     sys.path.insert(0, str(REPO / "tests"))
     from oracle_harness import duckdb_con
+
+    from npm_mirror_spark.registry import all_faces
 
     con = duckdb_con(sf_dir)
 
@@ -221,12 +225,11 @@ def test_cross_engine_output_type_families(spark, sf_dir):
         return t
 
     issues: list[str] = []
-    for name, sql in ORACLES.items():
+    for name, q, sql in all_faces():
+        if not sql:
+            continue
         dmap = {r[0]: fam(r[1]) for r in con.execute("DESCRIBE " + sql).fetchall()}
-        smap = {
-            f.name: fam(f.dataType.simpleString())
-            for f in QUERIES[name](spark, sf_dir).schema.fields
-        }
+        smap = {f.name: fam(f.dataType.simpleString()) for f in q(spark, sf_dir).schema.fields}
         if set(dmap) != set(smap):
             issues.append(f"{name}: column sets differ {sorted(set(dmap) ^ set(smap))}")
             continue
@@ -293,6 +296,37 @@ def test_all_faces_lists_registered_then_staged():
     staged = faces[len(QUERIES):]
     assert len(staged) == 50
     assert all(sql for _, _, sql in staged), [n for n, _, sql in staged if not sql]
+
+
+def test_family_faces_merge_into_registry():
+    """Each registered family entry is in QUERIES / ORACLES with its face
+    and resolved oracle; each staged one reaches all_faces() only."""
+    from npm_mirror_spark import faces
+    from npm_mirror_spark.registry import all_faces
+
+    staged = {n: (q, sql) for n, q, sql in all_faces()[len(QUERIES):]}
+    for e in faces.table():
+        sql = e.oracle(ORACLES) if callable(e.oracle) else e.oracle
+        if e.staged:
+            assert staged[e.name] == (e.face, sql) and e.name not in QUERIES, e.name
+        else:
+            assert QUERIES[e.name] is e.face and ORACLES[e.name] == sql, e.name
+
+
+def test_merge_raises_on_a_name_defined_twice():
+    from npm_mirror_spark.faces import Face, merge
+
+    def f(spark, sf_dir):
+        return None
+
+    cases = [
+        ({"q_a": f}, {}, [Face("q_a", f, None, False)]),  # vs the literal
+        ({}, {}, [Face("q_a", f, "SELECT 1", True), Face("q_a", f, None, True)]),
+        ({}, {}, [Face("q_a", f, None, True), Face("q_a", f, None, False)]),
+    ]
+    for queries, oracles, entries in cases:
+        with pytest.raises(ValueError, match="'q_a' is defined twice"):
+            merge(queries, oracles, entries)
 
 
 def test_resolve_face_matches_registry():

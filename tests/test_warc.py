@@ -301,10 +301,10 @@ def test_max_shard_bytes_routes_not_crashes(spark, tmp_path):
 
 
 def test_stream_default_is_executor_side_partition_reader(spark, tmp_path):
-    """Verdict item: the default stream path must be the
-    partition-planning DataSourceStreamReader (shard bytes read on
-    executors), NOT the Simple reader's driver-prefetch wrapper; and
-    its planned partitions must carry one shard each."""
+    """The stream path must be the partition-planning
+    DataSourceStreamReader (shard bytes read on executors, never
+    prefetched on the driver), and its planned partitions must carry
+    one shard each."""
     from pyspark.sql.datasource_internal import _streamReader
     from pyspark.sql.types import _parse_datatype_string
 
@@ -336,18 +336,12 @@ def test_stream_default_is_executor_side_partition_reader(spark, tmp_path):
     assert len(rows) == 3 and all(len(t) == 10 for t in rows)
     # monotone: latestOffset never goes backwards even if listing shrinks
     assert reader.latestOffset() == end
-    # simpleReader=true falls back to the driver-prefetch wrapper
-    simple = _streamReader(
-        cls(options={"path": str(d), "simplereader": "true"}), schema
-    )
-    assert type(simple).__name__ == "_SimpleStreamReaderWrapper"
 
 
-def test_stream_rows_identical_between_executor_and_simple_paths(
-    spark, tmp_path
-):
-    """The two stream faces must produce byte-identical record sets for
-    the same shards (same parser, same offset model)."""
+def test_stream_rows_identical_to_batch_read(spark, tmp_path):
+    """The executor-side stream drain and the batch ``read_warc`` must
+    produce byte-identical record sets for the same shards (same
+    parser)."""
     from npm_mirror_spark.sources.warc import register_warc_datasource
 
     register_warc_datasource(spark)
@@ -356,29 +350,26 @@ def test_stream_rows_identical_between_executor_and_simple_paths(
     write_warc(str(d / "2026-01-01-a.warc.gz"), _records(3))
     write_warc(str(d / "2026-01-02-b.warc.gz"), _records(2))
 
-    def drain(tag, **opts):
-        out = str(tmp_path / f"out_{tag}")
-        cp = str(tmp_path / f"cp_{tag}")
-        rs = spark.readStream.format("warc")
-        for k, v in opts.items():
-            rs = rs.option(k, v)
-        q = (
-            rs.load(str(d))
-            .writeStream.format("parquet")
-            .option("checkpointLocation", cp)
-            .option("path", out)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    def rows(df):
+        # batch paths carry a file: scheme, stream paths do not
         return sorted(
-            (r["path"], r["record_id"], r["offset"], bytes(r["payload"]))
-            for r in spark.read.parquet(out).collect()
+            (r["path"].rsplit("/", 1)[-1], r["record_id"], r["offset"], bytes(r["payload"]))
+            for r in df.collect()
         )
 
-    exec_rows = drain("exec")
-    simple_rows = drain("simple", simpleReader="true")
-    assert exec_rows == simple_rows and len(exec_rows) == 7
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("warc")
+        .load(str(d))
+        .writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .option("path", out)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    stream_rows = rows(spark.read.parquet(out))
+    assert stream_rows == rows(read_warc(spark, str(d))) and len(stream_rows) == 7
 
 
 def test_warc_randomized_payload_roundtrip(spark, tmp_path):
