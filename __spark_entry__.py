@@ -15,7 +15,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from npm_mirror_spark.queries import ORACLES, QUERIES, q_mirror_record
+from npm_mirror_spark.faces.aggregates import q_mirror_record
+from npm_mirror_spark.queries import ORACLES, QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:

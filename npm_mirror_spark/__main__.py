@@ -6,8 +6,8 @@
 
 `run` prints the first N rows and the row count; `explain` prints the
 formatted physical plan (the same evidence docs/PLANS.md is generated
-from). Uses the tuned session factory — pass --cpus to bound local
-parallelism.
+from). Uses the tuned session factory, ``get_spark()``: SPARK_GRAFT_CPUS
+sets both the local cores and the shuffle partitions.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ def main(argv: list[str] | None = None) -> int:
         s = sub.add_parser(name)
         s.add_argument("query")
         s.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-        s.add_argument("--cpus", type=int, default=8)
         if name == "run":
             s.add_argument("-n", "--rows", type=int, default=20)
 
@@ -35,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     rel.add_argument("out_dir")
     rel.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    rel.add_argument("--cpus", type=int, default=8)
     rel.add_argument("--capacity", type=int, default=512)
 
     args = p.parse_args(argv)
@@ -56,7 +54,7 @@ def main(argv: list[str] | None = None) -> int:
         from npm_mirror_spark.session import get_spark
         from npm_mirror_spark.tables import load_table
 
-        spark = get_spark(master=f"local[{args.cpus}]")
+        spark = get_spark()
         spark.sparkContext.setLogLevel("ERROR")
         docs = load_table(spark, args.sf_dir, "documents")
         bench = docs.where(F.col("doc_id") % 20 == 0)
@@ -73,7 +71,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from npm_mirror_spark.session import get_spark
 
-    spark = get_spark(master=f"local[{args.cpus}]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     df = QUERIES[args.query](spark, args.sf_dir)
     if args.cmd == "explain":

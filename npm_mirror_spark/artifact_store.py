@@ -8,8 +8,9 @@ does not survive 100 TB (small-file death); the Spark-native store is a
 parquet table with a ``binary`` content column:
 
 - partitioned by the same prefix bucket -> partition-pruned point lookups;
-- content column pruned away for metadata queries (tested in
-  test_multimodal.py);
+- content column pruned away for metadata queries: the seq scans behind
+  the pipeline's dedup read no blob (tested in
+  test_backfill_store.py::test_committed_seqs_scan_prunes_content);
 - GC is a declarative top-N-per-group + a compacting rewrite, with the
   evicted rows appended to the deletion log FIRST (log-then-delete, the
   same ordering the reference uses at changes_consumer.py:209-216). The

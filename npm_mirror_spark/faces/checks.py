@@ -7,7 +7,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from npm_mirror_spark.faces import DAILY_SQL, NORM, Face, daily_counts
+from npm_mirror_spark.faces import (
+    DAILY_SQL,
+    NORM,
+    daily_counts,
+    docs_with_dups,
+    nodec,
+)
+from npm_mirror_spark.operators import similarity as sim_ops
+from npm_mirror_spark.operators import text as text_ops
 from npm_mirror_spark.tables import load_table as _t
 
 
@@ -64,7 +72,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_candidate_pairs,
         simhash_pairs,
     )
-    from npm_mirror_spark.queries import _docs_with_dups
 
     # Deliberately NOT persisting the shared corpus subplan: a measured
     # A/B (docs/BENCH_NOTES.md r13) showed zero wall-clock change at
@@ -73,7 +80,7 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs more than the pruned parquet re-scan it saves.  The pair
     # sets (tiny, consumed twice) ARE persisted inside
     # capture_recapture.
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = docs_with_dups(spark, sf_dir)
     m = minhash_candidate_pairs(docs, "text", "doc_id", num_hashes=8, bands=4)
     s = simhash_pairs(docs, "doc_id", "text", max_hamming=3)
     return capture_recapture(m, s)
@@ -1419,7 +1426,6 @@ def q_rand_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_kmeans oracle SQL (three unrolled Lloyd rounds), so the whole
     train->assign->agree chain is driver-checkable; all cells are
     DOUBLED pair counts (no halving), one final division."""
-    from npm_mirror_spark.operators import similarity as sim_ops
     from npm_mirror_spark.operators.checks import ari_cells
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1573,31 +1579,510 @@ FROM u GROUP BY 1 ORDER BY 1
 """
 
 
-#: (name, face, oracle, staged) — ``faces.ORDER`` sets the sequence.
-FACES = (
-    Face("q_gk_gamma", q_gk_gamma, _GK_GAMMA_SQL, False),
-    Face("q_cochran_q", q_cochran_q, _COCHRAN_Q_SQL, False),
-    Face("q_capture_recapture", q_capture_recapture, _capture_recapture_oracle, False),
-    Face("q_mantel_haenszel", q_mantel_haenszel, _MH_SQL, False),
-    Face("q_digit_pref", q_digit_pref, _DIGIT_SQL, False),
-    Face("q_hoeffding", q_hoeffding, _HOEFFDING_SQL, False),
-    Face("q_somers_d", q_somers_d, _SOMERS_SQL, False),
-    Face("q_tau_c", q_tau_c, _TAUC_SQL, False),
-    Face("q_fleiss_kappa", q_fleiss_kappa, _FLEISS_SQL, False),
-    Face("q_weighted_kappa", q_weighted_kappa, _WKAPPA_SQL, False),
-    Face("q_bowker", q_bowker, _BOWKER_SQL, False),
-    Face("q_icc", q_icc, _icc_oracle(), True),
-    Face("q_gk_lambda", q_gk_lambda, _GK_LAMBDA_SQL, True),
-    Face("q_blomqvist_beta", q_blomqvist_beta, _BLOMQVIST_SQL, True),
-    Face("q_krippendorff", q_krippendorff, _krippendorff_oracle(), True),
-    Face("q_cronbach", q_cronbach, _CRONBACH_SQL, True),
-    Face("q_gwet_ac1", q_gwet_ac1, _gwet_oracle(), True),
-    Face("q_tau_partial", q_tau_partial, _TAU_PARTIAL_SQL, True),
-    Face("q_footrule", q_footrule, _FOOTRULE_SQL, True),
-    Face("q_t_closeness", q_t_closeness, _T_CLOSENESS_SQL, True),
-    Face("q_lin_ccc", q_lin_ccc, _LIN_CCC_SQL, True),
-    Face("q_hoover_index", q_hoover_index, _HOOVER_SQL, True),
-    Face("q_rand_index", q_rand_index, _rand_index_oracle, True),
-    Face("q_lorenz", q_lorenz, _LORENZ_SQL, True),
-    Face("q_ess_audit", q_ess_audit, _ESS_AUDIT_SQL, True),
-)
+def q_quality_checks(spark, sf_dir):
+    """Declarative data-quality contract over orders
+    (operators/checks.py:constraint_report — the Deequ pattern): six
+    constraints (completeness, two uniqueness — one deliberately
+    failing on the repeating o_custkey, value domain, format regex,
+    min/max bounds) evaluated in ONE aggregation job over ONE scan;
+    every metric is a ratio of exact counts or an exact min/max, so the
+    oracle reproduces each value and verdict bit-for-bit."""
+    from npm_mirror_spark.operators import checks as checks_ops
+
+    o = _t(spark, sf_dir, "orders")
+    return checks_ops.constraint_report(o, [
+        ("custkey_complete", "completeness", "o_custkey", 1.0),
+        ("orderkey_unique", "uniqueness", "o_orderkey", 1.0),
+        ("custkey_unique", "uniqueness", "o_custkey", 1.0),  # fails: repeats
+        ("status_domain", "in_set", "o_orderstatus", 1.0, ["O", "F", "P"]),
+        ("priority_format", "matches", "o_orderpriority", 1.0, "^[1-5]-[A-Z ]+$"),
+        ("price_positive", "min_value", "o_totalprice", 0.0),
+    ])
+
+
+# q_quality_checks: each constraint is the same exact-count ratio (or
+# exact min) the Spark aggregate computes; the report shape is one
+# UNION ALL branch per constraint over the same base aggregates.
+_QUALITY_CHECKS_SQL = """
+WITH a AS (
+  SELECT count(*) AS n,
+         count(o_custkey) AS nn_ck,
+         count(o_orderkey) AS nn_ok, count(DISTINCT o_orderkey) AS nd_ok,
+         count(DISTINCT o_custkey) AS nd_ck,
+         count(o_orderstatus) AS nn_st,
+         sum(CASE WHEN o_orderstatus IN ('O','F','P') THEN 1 ELSE 0 END) AS hit_st,
+         count(o_orderpriority) AS nn_pr,
+         sum(CASE WHEN regexp_matches(o_orderpriority, '^[1-5]-[A-Z ]+$')
+                  THEN 1 ELSE 0 END) AS hit_pr,
+         CAST(min(o_totalprice) AS DOUBLE) AS mn_tp
+  FROM orders)
+SELECT 'custkey_complete' AS name, 'completeness' AS kind,
+       'o_custkey' AS "column",
+       CASE WHEN n > 0 THEN CAST(nn_ck AS DOUBLE) / CAST(n AS DOUBLE)
+            ELSE 1.0 END AS metric,
+       -- CAST coerces the whole UNION'd column to DOUBLE (a bare 1.0
+       -- literal is DECIMAL(2,1) in DuckDB; Spark's face emits double)
+       CAST(1.0 AS DOUBLE) AS threshold,
+       CASE WHEN n > 0 THEN CAST(nn_ck AS DOUBLE) / CAST(n AS DOUBLE)
+            ELSE 1.0 END >= 1.0 AS ok
+FROM a
+UNION ALL
+SELECT 'orderkey_unique', 'uniqueness', 'o_orderkey',
+       CASE WHEN nn_ok > 0 THEN CAST(nd_ok AS DOUBLE) / CAST(nn_ok AS DOUBLE)
+            ELSE 1.0 END,
+       1.0,
+       CASE WHEN nn_ok > 0 THEN CAST(nd_ok AS DOUBLE) / CAST(nn_ok AS DOUBLE)
+            ELSE 1.0 END >= 1.0
+FROM a
+UNION ALL
+SELECT 'custkey_unique', 'uniqueness', 'o_custkey',
+       CASE WHEN nn_ck > 0 THEN CAST(nd_ck AS DOUBLE) / CAST(nn_ck AS DOUBLE)
+            ELSE 1.0 END,
+       1.0,
+       CASE WHEN nn_ck > 0 THEN CAST(nd_ck AS DOUBLE) / CAST(nn_ck AS DOUBLE)
+            ELSE 1.0 END >= 1.0
+FROM a
+UNION ALL
+SELECT 'status_domain', 'in_set', 'o_orderstatus',
+       CASE WHEN nn_st > 0 THEN CAST(hit_st AS DOUBLE) / CAST(nn_st AS DOUBLE)
+            ELSE 1.0 END,
+       1.0,
+       CASE WHEN nn_st > 0 THEN CAST(hit_st AS DOUBLE) / CAST(nn_st AS DOUBLE)
+            ELSE 1.0 END >= 1.0
+FROM a
+UNION ALL
+SELECT 'priority_format', 'matches', 'o_orderpriority',
+       CASE WHEN nn_pr > 0 THEN CAST(hit_pr AS DOUBLE) / CAST(nn_pr AS DOUBLE)
+            ELSE 1.0 END,
+       1.0,
+       CASE WHEN nn_pr > 0 THEN CAST(hit_pr AS DOUBLE) / CAST(nn_pr AS DOUBLE)
+            ELSE 1.0 END >= 1.0
+FROM a
+UNION ALL
+SELECT 'price_positive', 'min_value', 'o_totalprice', mn_tp, 0.0,
+       mn_tp >= 0.0
+FROM a
+"""
+
+
+def q_drift_report(spark, sf_dir):
+    """Column-level drift between two corpus slices
+    (operators/checks.py:drift_report — the data-validation twin of
+    q_quality_checks): null-rate, distinct-cardinality and exact-
+    decimal-mean deltas per column, one single-scan aggregation job per
+    side, 1-row results broadcast-joined and unpivoted. Contracts catch
+    breakage; drift catches the silent distribution shift between
+    release N-1 and N that still poisons training downstream. Every
+    metric is a ratio of exact counts, so verdicts replay in SQL."""
+    from npm_mirror_spark.operators import checks as checks_ops
+
+    d = _t(spark, sf_dir, "documents")
+    return checks_ops.drift_report(
+        d.where(F.col("source") == "src1"),
+        d.where(F.col("source") == "src2"),
+        ["lang", "n_chars", "text"],
+    ).orderBy("column")
+
+
+# q_drift_report: both sides' single-scan metric rows, the broadcast
+# cross join, and the per-column verdict algebra replayed with the same
+# tolerance literals (0.02 / 0.10 / 0.05).
+_DRIFT_REPORT_SQL = """
+WITH sa AS (
+  SELECT count(*) AS n,
+         count(lang) AS nn_lang, count(DISTINCT lang) AS d_lang,
+         count(n_chars) AS nn_nc, count(DISTINCT n_chars) AS d_nc,
+         sum(CAST(CAST(n_chars AS DECIMAL(28,4)) * 10000 AS DECIMAL(32,0))) AS s_nc,
+         count(text) AS nn_t, count(DISTINCT text) AS d_t
+  FROM documents WHERE source = 'src1'),
+sb AS (
+  SELECT count(*) AS n,
+         count(lang) AS nn_lang, count(DISTINCT lang) AS d_lang,
+         count(n_chars) AS nn_nc, count(DISTINCT n_chars) AS d_nc,
+         sum(CAST(CAST(n_chars AS DECIMAL(28,4)) * 10000 AS DECIMAL(32,0))) AS s_nc,
+         count(text) AS nn_t, count(DISTINCT text) AS d_t
+  FROM documents WHERE source = 'src2'),
+j AS (SELECT * FROM sa CROSS JOIN (
+        SELECT n AS n_b, nn_lang AS nn_lang_b, d_lang AS d_lang_b,
+               nn_nc AS nn_nc_b, d_nc AS d_nc_b, s_nc AS s_nc_b,
+               nn_t AS nn_t_b, d_t AS d_t_b FROM sb)),
+rows_ AS (
+  SELECT 'lang' AS column_, n, n_b,
+         CASE WHEN n > 0 THEN CAST(n - nn_lang AS DOUBLE) / n ELSE 0.0 END AS nr_a,
+         CASE WHEN n_b > 0 THEN CAST(n_b - nn_lang_b AS DOUBLE) / n_b ELSE 0.0 END AS nr_b,
+         d_lang AS d_a, d_lang_b AS d_b,
+         CAST(NULL AS DOUBLE) AS m_a, CAST(NULL AS DOUBLE) AS m_b,
+         FALSE AS is_num
+  FROM j
+  UNION ALL
+  SELECT 'n_chars', n, n_b,
+         CASE WHEN n > 0 THEN CAST(n - nn_nc AS DOUBLE) / n ELSE 0.0 END,
+         CASE WHEN n_b > 0 THEN CAST(n_b - nn_nc_b AS DOUBLE) / n_b ELSE 0.0 END,
+         d_nc, d_nc_b,
+         CASE WHEN nn_nc > 0 THEN (CAST(s_nc AS DOUBLE) / 10000.0) / nn_nc END,
+         CASE WHEN nn_nc_b > 0 THEN (CAST(s_nc_b AS DOUBLE) / 10000.0) / nn_nc_b END,
+         TRUE
+  FROM j
+  UNION ALL
+  SELECT 'text', n, n_b,
+         CASE WHEN n > 0 THEN CAST(n - nn_t AS DOUBLE) / n ELSE 0.0 END,
+         CASE WHEN n_b > 0 THEN CAST(n_b - nn_t_b AS DOUBLE) / n_b ELSE 0.0 END,
+         d_t, d_t_b,
+         CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
+         FALSE
+  FROM j),
+verdicts AS (
+  SELECT column_, n, n_b, nr_a, nr_b, d_a, d_b, m_a, m_b,
+         abs(nr_a - nr_b) > 0.02 AS null_drift,
+         CAST(abs(d_a - d_b) AS DOUBLE)
+           > 0.10 * CAST(greatest(d_a, d_b, 1) AS DOUBLE) AS distinct_drift,
+         CASE WHEN is_num
+              THEN coalesce(abs(m_a - m_b)
+                     > 0.05 * greatest(abs(m_a), abs(m_b)), FALSE)
+              ELSE FALSE END AS mean_drift
+  FROM rows_)
+SELECT column_ AS "column", CAST(n AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+       nr_a AS null_rate_a, nr_b AS null_rate_b,
+       CAST(d_a AS BIGINT) AS distinct_a, CAST(d_b AS BIGINT) AS distinct_b,
+       m_a AS mean_a, m_b AS mean_b,
+       null_drift, distinct_drift, mean_drift,
+       (null_drift OR distinct_drift OR mean_drift) AS drifted
+FROM verdicts
+ORDER BY column_
+"""
+
+
+def q_validated_batch(spark, sf_dir):
+    """The ValidatedAppend gate's batch decision as a driver-checkable
+    relational face (operators/checks.py:grouped_constraint_report —
+    r7 verdict item 5): orders split into 4 deterministic batches
+    (o_orderkey % 4), two of which get md5-seeded corruption (batch 2:
+    negated prices on ~1/13 of rows; batch 3: nulled status) — then
+    every batch's constraint report plus the all-or-nothing routing
+    verdict ('main' / 'quarantine') comes out of ONE aggregation job,
+    exactly the per-micro-batch decision
+    streaming/validated_append.py::ValidatedAppend.process_batch makes
+    (pinned for exactly-once replay in tests/test_validated_append.py).
+    Exact count ratios and min/max only — bit-for-bit replayable."""
+    from npm_mirror_spark.operators import checks as checks_ops
+    from npm_mirror_spark.operators.dedup import md5_key64
+
+    o = _t(spark, sf_dir, "orders")
+    hit = F.pmod(md5_key64(F.col("o_orderkey"), 1), F.lit(13)) == 0
+    batched = o.select(
+        F.pmod(F.col("o_orderkey"), F.lit(4)).cast("int").alias("batch_id"),
+        F.when(
+            (F.pmod(F.col("o_orderkey"), F.lit(4)) == 2) & hit,
+            -F.col("o_totalprice"),
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("o_totalprice"),
+        F.when(
+            (F.pmod(F.col("o_orderkey"), F.lit(4)) == 3) & hit,
+            F.lit(None).cast("string"),
+        )
+        .otherwise(F.col("o_orderstatus"))
+        .alias("o_orderstatus"),
+    )
+    return checks_ops.grouped_constraint_report(batched, "batch_id", [
+        ("status_complete", "completeness", "o_orderstatus", 1.0),
+        ("status_domain", "in_set", "o_orderstatus", 1.0, ["O", "F", "P"]),
+        ("price_positive", "min_value", "o_totalprice", 0.0),
+    ]).orderBy("batch_id", "name")
+
+
+# q_validated_batch: the grouped contract gate replayed — md5-seeded
+# corruption, per-batch exact-count metrics, the three-constraint
+# conjunction and the main/quarantine verdict.
+_VALIDATED_BATCH_SQL = """
+WITH h AS (
+  SELECT *,
+         (('0x' || substr(md5('1:' || CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT
+          % 13 = 0) AS hit
+  FROM orders),
+b AS (
+  SELECT CAST(o_orderkey % 4 AS INTEGER) AS batch_id,
+         CASE WHEN o_orderkey % 4 = 2 AND hit THEN -o_totalprice
+              ELSE o_totalprice END AS price,
+         CASE WHEN o_orderkey % 4 = 3 AND hit THEN NULL
+              ELSE o_orderstatus END AS status
+  FROM h),
+per AS (
+  SELECT batch_id,
+         CASE WHEN count(*) > 0
+              THEN CAST(count(status) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+              ELSE 1.0 END AS m0,
+         CASE WHEN count(status) > 0
+              THEN CAST(sum(CASE WHEN status IN ('O','F','P') THEN 1 ELSE 0 END)
+                        AS DOUBLE) / CAST(count(status) AS DOUBLE)
+              ELSE 1.0 END AS m1,
+         CAST(min(price) AS DOUBLE) AS m2
+  FROM b GROUP BY 1),
+v AS (
+  SELECT batch_id, m0, m1, m2,
+         (m0 >= 1.0 AND m1 >= 1.0 AND m2 >= 0.0) AS group_ok
+  FROM per)
+SELECT batch_id, name, kind, "column", metric, threshold, ok, group_ok,
+       CASE WHEN group_ok THEN 'main' ELSE 'quarantine' END AS route
+FROM (
+  SELECT batch_id, 'status_complete' AS name, 'completeness' AS kind,
+         'o_orderstatus' AS "column", m0 AS metric,
+         CAST(1.0 AS DOUBLE) AS threshold,
+         m0 >= 1.0 AS ok, group_ok FROM v
+  UNION ALL
+  SELECT batch_id, 'status_domain', 'in_set', 'o_orderstatus', m1, 1.0,
+         m1 >= 1.0, group_ok FROM v
+  UNION ALL
+  SELECT batch_id, 'price_positive', 'min_value', 'o_totalprice', m2, 0.0,
+         m2 >= 0.0, group_ok FROM v)
+ORDER BY batch_id, name
+"""
+
+
+def q_kanonymity(spark, sf_dir):
+    """k-anonymity / l-diversity audit (operators/checks.py:
+    kanonymity_report): customers bucketed by the quasi-identifier pair
+    (nation, market segment), account balance as the sensitive
+    attribute — per k in (2,5,10), how many equivalence classes (and
+    rows) fall below k, plus the l-diversity leak count.  ONE quasi-key
+    groupBy bounded by the 25x5 identifier domain, then a 3-row
+    literal explode + re-aggregation — no window, no self-join."""
+    from npm_mirror_spark.operators.checks import kanonymity_report
+
+    c = _t(spark, sf_dir, "customer")
+    return kanonymity_report(
+        c, ["c_nationkey", "c_mktsegment"], "c_acctbal", ks=(2, 5, 10),
+        l_div=2,
+    )
+
+
+# q_kanonymity: one quasi-key groupBy -> class table, 3-row k explode,
+# re-aggregate; l-diversity counts are k-independent.
+_KANONYMITY_SQL = """
+WITH classes AS (
+  SELECT c_nationkey, c_mktsegment,
+         count(*) AS sz, count(DISTINCT c_acctbal) AS ldiv
+  FROM customer GROUP BY 1, 2),
+ks AS (SELECT * FROM (VALUES (2), (5), (10)) AS t(k))
+SELECT CAST(k AS INTEGER) AS k,
+       CAST(count(*) AS BIGINT) AS n_classes,
+       CAST(min(sz) AS BIGINT) AS min_class_size,
+       CAST(sum(CASE WHEN sz < k THEN 1 ELSE 0 END) AS BIGINT)
+         AS classes_below_k,
+       CAST(sum(CASE WHEN sz < k THEN sz ELSE 0 END) AS BIGINT)
+         AS rows_below_k,
+       CAST(sum(CASE WHEN ldiv < 2 THEN 1 ELSE 0 END) AS BIGINT)
+         AS classes_low_ldiv,
+       CAST(sum(CASE WHEN ldiv < 2 THEN sz ELSE 0 END) AS BIGINT)
+         AS rows_low_ldiv
+FROM classes CROSS JOIN ks
+GROUP BY k ORDER BY k
+"""
+
+
+def q_chisq(spark, sf_dir):
+    """Chi-square independence audit (operators/checks.py:
+    chisq_independence_cells): is order status independent of order
+    priority?  Reported PER CELL (3x5 bounded output) so every number
+    is exact DECIMAL(38,0) or a single deterministic IEEE op — obs*N
+    cross-multiplied against the margin product, never a float total.
+    Three bounded groupBys + broadcast margin joins."""
+    from npm_mirror_spark.operators.checks import chisq_independence_cells
+
+    o = _t(spark, sf_dir, "orders")
+    return nodec(
+        chisq_independence_cells(o, "o_orderstatus", "o_orderpriority")
+    )
+
+
+# q_chisq: per-cell |obs*N - row_m*col_m| in HUGEINT, chi2 contribution
+# as (dev/den)*dev — per-cell independent IEEE ops, both engines agree.
+_CHISQ_SQL = """
+WITH obs AS (
+  SELECT o_orderstatus, o_orderpriority, count(*) AS obs
+  FROM orders GROUP BY 1, 2),
+rm AS (SELECT o_orderstatus, count(*) AS row_m FROM orders GROUP BY 1),
+cm AS (SELECT o_orderpriority, count(*) AS col_m FROM orders GROUP BY 1),
+t AS (SELECT count(*) AS n_total FROM orders)
+SELECT o.o_orderstatus, o.o_orderpriority,
+       CAST(o.obs AS BIGINT) AS obs,
+       CAST(rm.row_m AS BIGINT) AS row_m,
+       CAST(cm.col_m AS BIGINT) AS col_m,
+       CAST(t.n_total AS BIGINT) AS n_total,
+       CAST(CAST(abs(CAST(o.obs AS HUGEINT) * CAST(t.n_total AS HUGEINT)
+                 - CAST(rm.row_m AS HUGEINT) * CAST(cm.col_m AS HUGEINT))
+            AS VARCHAR) AS DOUBLE) AS dev_num,
+       (CAST(CAST(abs(CAST(o.obs AS HUGEINT) * CAST(t.n_total AS HUGEINT)
+                 - CAST(rm.row_m AS HUGEINT) * CAST(cm.col_m AS HUGEINT))
+             AS VARCHAR) AS DOUBLE)
+        / CAST(CAST(CAST(rm.row_m AS HUGEINT) * CAST(cm.col_m AS HUGEINT)
+               * CAST(t.n_total AS HUGEINT) AS VARCHAR) AS DOUBLE))
+         * CAST(CAST(abs(CAST(o.obs AS HUGEINT) * CAST(t.n_total AS HUGEINT)
+                    - CAST(rm.row_m AS HUGEINT)
+                      * CAST(cm.col_m AS HUGEINT)) AS VARCHAR) AS DOUBLE)
+         AS chi2_cell
+FROM obs o
+JOIN rm USING (o_orderstatus)
+JOIN cm USING (o_orderpriority)
+CROSS JOIN t
+ORDER BY o.o_orderstatus, o.o_orderpriority
+"""
+
+
+def q_kappa(spark, sf_dir):
+    """Cohen's kappa between the stored gold ``lang`` label and the
+    cheap stopword language-id heuristic (operators/checks.py:
+    cohens_kappa over operators/text.py:language_id) — the
+    chance-corrected agreement audit a labeling pipeline runs before
+    trusting either side.  Exact integer margins; kappa =
+    (n_agree*N - pe_num)/(N*N - pe_num), one IEEE division of exact
+    DECIMAL(38,0) operands; face emits double per the decimal-face
+    contract."""
+    from npm_mirror_spark.operators.checks import cohens_kappa
+
+    d = _t(spark, sf_dir, "documents")
+    pair = d.select("lang", text_ops.language_id("text").alias("lang_guess"))
+    return nodec(cohens_kappa(pair, "lang", "lang_guess"))
+
+
+# q_kappa: the q_lang_id stopword scorer replayed, then exact margins;
+# kappa = (agree*N - pe)/(N*N - pe), VARCHAR-routed doubles.
+_KAPPA_SQL = f"""
+WITH w AS (SELECT doc_id, str_split({NORM}, ' ') AS toks FROM documents),
+s AS (SELECT doc_id,
+  len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS s_en,
+  len(list_filter(toks, x -> list_contains(['el','la','de','y','que','en','es'], x))) AS s_es,
+  len(list_filter(toks, x -> list_contains(['le','la','de','et','que','en','est'], x))) AS s_fr,
+  len(list_filter(toks, x -> list_contains(['der','die','das','und','zu','in','ist'], x))) AS s_de
+  FROM w),
+guess AS (
+  SELECT doc_id, CASE WHEN greatest(s_en, s_es, s_fr, s_de) = 0 THEN 'und'
+    WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
+    WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
+    WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
+    ELSE 'fr' END AS b
+  FROM s),
+pair AS (
+  SELECT d.lang AS a, g.b FROM documents d JOIN guess g USING (doc_id)),
+agree AS (
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT) AS n_agree
+  FROM pair),
+rm AS (SELECT a AS c, count(*) AS r FROM pair GROUP BY 1),
+cm AS (SELECT b AS c, count(*) AS m FROM pair GROUP BY 1),
+pe AS (
+  SELECT coalesce(sum(CAST(r AS HUGEINT) * CAST(m AS HUGEINT)),
+                  CAST(0 AS HUGEINT)) AS pe_num
+  FROM rm JOIN cm USING (c))
+SELECT n, n_agree,
+       CAST(CAST(pe_num AS VARCHAR) AS DOUBLE) AS pe_num,
+       CAST(n_agree AS DOUBLE) / CAST(n AS DOUBLE) AS po,
+       CAST(CAST(CAST(n_agree AS HUGEINT) * CAST(n AS HUGEINT) - pe_num
+                 AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT) - pe_num
+                     AS VARCHAR) AS DOUBLE) AS kappa
+FROM agree CROSS JOIN pe
+"""
+
+
+def q_cochran_armitage(spark, sf_dir):
+    """Cochran–Armitage trend-in-proportions (operators/checks.py:
+    cochran_armitage): does the share of FULLY-SHIPPED orders trend
+    across the ORDERED priority scale (1-URGENT … 5-LOW)?  The
+    dose-response question q_chisq cannot ask (independence treats the
+    priorities as unordered).  T = Σ s_i(r_i N - R n_i) in exact
+    DECIMAL(38,0); the report is the exact numerator + the scale-free
+    T/N² effect — the rank_sum no-sqrt discipline."""
+    from npm_mirror_spark.operators.checks import cochran_armitage
+
+    o = _t(spark, sf_dir, "orders")
+    return nodec(
+        cochran_armitage(
+            o,
+            success=(F.col("o_orderstatus") == "F"),
+            score=F.substring("o_orderpriority", 1, 1).cast("int"),
+        )
+    )
+
+
+# q_cochran_armitage: T = sum s_i(r_i*N - R*n_i) in HUGEINT over the
+# bounded score axis, effect = T/N^2 — VARCHAR-routed doubles.
+_COCHRAN_ARMITAGE_SQL = """
+WITH g AS (
+  SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS s,
+         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
+  FROM orders),
+per AS (SELECT s, count(*) AS n_i, sum(y) AS r_i FROM g GROUP BY 1),
+t AS (SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(y) AS BIGINT) AS r_total FROM g),
+agg AS (
+  SELECT max(n) AS n, max(r_total) AS r_total,
+         CAST(count(*) AS BIGINT) AS n_groups,
+         sum(CAST(s AS HUGEINT)
+             * (CAST(r_i AS HUGEINT) * CAST(n AS HUGEINT)
+                - CAST(r_total AS HUGEINT) * CAST(n_i AS HUGEINT)))
+           AS t_num
+  FROM per CROSS JOIN t)
+SELECT n, r_total, n_groups,
+       CAST(CAST(t_num AS VARCHAR) AS DOUBLE) AS t_num,
+       CAST(CAST(t_num AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(CAST(n AS HUGEINT) * CAST(n AS HUGEINT)
+                     AS VARCHAR) AS DOUBLE) AS t_over_n2
+FROM agg
+"""
+
+
+def q_mcnemar(spark, sf_dir):
+    """McNemar's paired test (operators/checks.py:mcnemar_paired)
+    between two is-English classifiers scored against the gold ``lang``
+    label on the SAME documents: A = the stopword language-id argmax
+    (text.py:language_id == 'en'), B = the one-token baseline ("does the
+    normalized text contain the token 'the'").  Kappa (q_kappa) asks
+    whether two labelers agree; McNemar asks the model-selection
+    question — is A actually MORE ACCURATE than B, judged only on the
+    discordant rows?  chi^2 = (b-c)^2/(b+c), one IEEE division of exact
+    longs, NULL when no discordant pair exists; single scan, one
+    map-side fold, no decimal output."""
+    from npm_mirror_spark.operators.checks import mcnemar_paired
+    from npm_mirror_spark.operators.dedup import normalize_text
+
+    d = _t(spark, sf_dir, "documents")
+    return mcnemar_paired(
+        d,
+        gold=F.col("lang") == "en",
+        pred_a=text_ops.language_id("text") == "en",
+        pred_b=F.array_contains(
+            F.split(normalize_text("text"), " "), "the"
+        ),
+    )
+
+
+_MCNEMAR_SQL = f"""
+WITH w AS (SELECT doc_id, lang, str_split({NORM}, ' ') AS toks FROM documents),
+s AS (SELECT doc_id, lang, toks,
+  len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS s_en,
+  len(list_filter(toks, x -> list_contains(['el','la','de','y','que','en','es'], x))) AS s_es,
+  len(list_filter(toks, x -> list_contains(['le','la','de','et','que','en','est'], x))) AS s_fr,
+  len(list_filter(toks, x -> list_contains(['der','die','das','und','zu','in','ist'], x))) AS s_de
+  FROM w),
+flags AS (
+  SELECT
+    CASE WHEN (CASE WHEN greatest(s_en, s_es, s_fr, s_de) = 0 THEN 'und'
+      WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
+      WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
+      WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
+      ELSE 'fr' END = 'en') = (lang = 'en') THEN 1 ELSE 0 END AS ca,
+    CASE WHEN list_contains(toks, 'the') = (lang = 'en') THEN 1 ELSE 0 END AS cb
+  FROM s)
+SELECT CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(ca) AS BIGINT) AS a_correct,
+       CAST(sum(cb) AS BIGINT) AS b_correct,
+       CAST(sum(ca * (1 - cb)) AS BIGINT) AS b_discordant,
+       CAST(sum((1 - ca) * cb) AS BIGINT) AS c_discordant,
+       CASE WHEN sum(ca * (1 - cb)) + sum((1 - ca) * cb) > 0
+            THEN CAST((sum(ca * (1 - cb)) - sum((1 - ca) * cb))
+                      * (sum(ca * (1 - cb)) - sum((1 - ca) * cb)) AS DOUBLE)
+               / CAST(sum(ca * (1 - cb)) + sum((1 - ca) * cb) AS DOUBLE)
+            ELSE NULL END AS mcnemar_x2
+FROM flags
+"""

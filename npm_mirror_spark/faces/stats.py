@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from npm_mirror_spark.faces import DAILY_SQL, Face, daily_counts
+from npm_mirror_spark.faces import DAILY_SQL, daily_counts, nodec
 from npm_mirror_spark.tables import load_table as _t
 
 
@@ -1471,7 +1471,7 @@ def q_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spearman_rho(d, "h_even", "h_odd")
     # driver-hashable contract: decimal accumulators stay internal,
     # the face reports correctly-rounded doubles (the q_spearman
-    # _nodec convention, paired with the oracle's VARCHAR route)
+    # nodec convention, paired with the oracle's VARCHAR route)
     from pyspark.sql.types import DecimalType
 
     return out.select(
@@ -1805,38 +1805,633 @@ FROM ranked GROUP BY 1 ORDER BY 1
 """
 
 
-#: (name, face, oracle, staged) — ``faces.ORDER`` sets the sequence.
-FACES = (
-    Face("q_friedman", q_friedman, _FRIEDMAN_SQL, False),
-    Face("q_brown_forsythe", q_brown_forsythe, _BROWN_FORSYTHE_SQL, False),
-    Face("q_jonckheere", q_jonckheere, _JONCKHEERE_SQL, False),
-    Face("q_durbin_watson", q_durbin_watson, _DURBIN_WATSON_SQL, False),
-    Face("q_mood_median", q_mood_median, _MOOD_MEDIAN_SQL, False),
-    Face("q_page_trend", q_page_trend, _PAGE_SQL, False),
-    Face("q_conover_scale", q_conover_scale, _CONOVER_SQL, False),
-    Face("q_quade", q_quade, _QUADE_SQL, False),
-    Face("q_cliff_delta", q_cliff_delta, _CLIFF_SQL, False),
-    Face("q_signed_rank", q_signed_rank, _SIGNED_RANK_SQL, False),
-    Face("q_cvm2", q_cvm2, _CVM2_SQL, False),
-    Face("q_kendall_w", q_kendall_w, _KENDALL_W_SQL, True),
-    Face("q_dixon", q_dixon, _DIXON_SQL, True),
-    Face("q_grubbs", q_grubbs, _GRUBBS_SQL, True),
-    Face("q_rank_scale", q_rank_scale, _RANK_SCALE_SQL, True),
-    Face("q_jarque_bera", q_jarque_bera, _JB_SQL, True),
-    Face("q_kuiper", q_kuiper, _KUIPER_SQL, True),
-    Face("q_hodges_lehmann", q_hodges_lehmann, _HL_SQL, True),
-    Face("q_cuzick", q_cuzick, _CUZICK_SQL, True),
-    Face("q_aligned_ranks", q_aligned_ranks, _ALIGNED_SQL, True),
-    Face("q_yuen_trim", q_yuen_trim, _YUEN_SQL, True),
-    Face("q_robust_shape", q_robust_shape, _ROBUST_SHAPE_SQL, True),
-    Face("q_tukey_fences", q_tukey_fences, _TUKEY_SQL, True),
-    Face("q_weekday_anova", q_weekday_anova, _WEEKDAY_ANOVA_SQL, True),
-    Face("q_shift_function", q_shift_function, _SHIFT_SQL, True),
-    Face("q_rank_stability", q_rank_stability, _rank_stability_oracle(), True),
-    Face("q_foster_stuart", q_foster_stuart, _FOSTER_STUART_SQL, True),
-    Face("q_longest_run", q_longest_run, _LONGEST_RUN_SQL, True),
-    Face("q_gk_tau", q_gk_tau, _GK_TAU_SQL, True),
-    Face("q_variance_ratio", q_variance_ratio, _VARIANCE_RATIO_SQL, True),
-    Face("q_dunn_pairs", q_dunn_pairs, _dunn_pairs_oracle, True),
-    Face("q_durbin_rank", q_durbin_rank, _DURBIN_RANK_SQL, True),
-)
+def q_rank_sum(spark, sf_dir):
+    """Mann–Whitney rank-sum test (operators/stats.py:rank_sum_test):
+    do English documents run longer than the rest of the corpus?
+    Midrank-exact by integer doubling (2*R1, 2*U1), effect size as the
+    exact AUC — one IEEE division, no sqrt/libm anywhere, so the whole
+    test replays bit-for-bit.  Distinct-value collapse + the bounded
+    two-level bucket prefix: no single-reducer rank window at 100 TB."""
+    from npm_mirror_spark.operators.stats import rank_sum_test
+
+    d = _t(spark, sf_dir, "documents")
+    return nodec(rank_sum_test(d, "n_chars", F.col("lang") == "en"))
+
+
+# q_rank_sum: midrank identity replayed over the distinct-value axis —
+# per-value doubled A-contribution cnt_a*(2*below + t + 1) in HUGEINT,
+# one final division for the AUC.
+_RANK_SUM_SQL = """
+WITH g AS (
+  SELECT n_chars AS v,
+         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS cnt_a,
+         sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS cnt_b
+  FROM documents GROUP BY 1),
+p AS (
+  SELECT v, cnt_a, cnt_b,
+         coalesce(sum(cnt_a + cnt_b) OVER (ORDER BY v
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+  FROM g),
+t AS (
+  SELECT CAST(sum(cnt_a) AS BIGINT) AS n1,
+         CAST(sum(cnt_b) AS BIGINT) AS n2,
+         sum(CAST(cnt_a AS HUGEINT)
+             * CAST(2 * below + cnt_a + cnt_b + 1 AS HUGEINT)) AS r1_x2
+  FROM p)
+SELECT n1, n2,
+       -- faces emit DOUBLE, never DECIMAL (r9 driver contract): the
+       -- VARCHAR route is DuckDB's correctly-rounded parser, matching
+       -- Spark's BigDecimal.doubleValue bit-for-bit at any magnitude
+       CAST(CAST(r1_x2 AS VARCHAR) AS DOUBLE) AS r1_x2,
+       CAST(CAST(r1_x2 - CAST(n1 AS HUGEINT) * CAST(n1 + 1 AS HUGEINT)
+                 AS VARCHAR) AS DOUBLE) AS u1_x2,
+       CAST(CAST(r1_x2 - CAST(n1 AS HUGEINT) * CAST(n1 + 1 AS HUGEINT)
+                 AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(CAST(2 AS HUGEINT) * CAST(n1 AS HUGEINT)
+                     * CAST(n2 AS HUGEINT) AS VARCHAR) AS DOUBLE) AS auc
+FROM t
+"""
+
+
+def q_ks_stat(spark, sf_dir):
+    """Two-sample Kolmogorov–Smirnov (operators/stats.py:ks_2samp):
+    max ECDF gap between English and non-English doc lengths, located
+    in EXACT integer arithmetic (cross-multiplied |cum1*n2 - cum2*n1|;
+    the (gap, -value) struct max is a map-side-combinable argmax, no
+    sort).  Only the final report divides.  The distribution-shift
+    alarm the drift family (q_drift_report) thresholds on moments
+    cannot see — KS catches shape changes at equal means."""
+    from npm_mirror_spark.operators.stats import ks_2samp
+
+    d = _t(spark, sf_dir, "documents")
+    return nodec(ks_2samp(d, "n_chars", F.col("lang") == "en"))
+
+
+# q_ks_stat: cross-multiplied integer ECDF gap, argmax = (max gap, min
+# value) — the struct-max total order restated as two scalar subqueries.
+_KS_STAT_SQL = """
+WITH g AS (
+  SELECT n_chars AS v,
+         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS cnt_a,
+         sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS cnt_b
+  FROM documents GROUP BY 1),
+p AS (
+  SELECT v,
+         sum(cnt_a) OVER (ORDER BY v
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_a,
+         sum(cnt_b) OVER (ORDER BY v
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_b
+  FROM g),
+t AS (SELECT CAST(sum(cnt_a) AS BIGINT) AS n1,
+             CAST(sum(cnt_b) AS BIGINT) AS n2 FROM g),
+d AS (
+  SELECT v,
+         abs(CAST(cum_a AS HUGEINT) * t.n2
+             - CAST(cum_b AS HUGEINT) * t.n1) AS gap
+  FROM p CROSS JOIN t)
+SELECT t.n1, t.n2,
+       CAST(CAST((SELECT max(gap) FROM d) AS VARCHAR) AS DOUBLE) AS d_num,
+       (SELECT min(v) FROM d WHERE gap = (SELECT max(gap) FROM d))
+         AS at_value,
+       CAST(CAST((SELECT max(gap) FROM d) AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(CAST(t.n1 AS HUGEINT) * CAST(t.n2 AS HUGEINT)
+                     AS VARCHAR) AS DOUBLE)
+         AS d
+FROM t
+"""
+
+
+def q_spearman(spark, sf_dir):
+    """Spearman rank correlation (operators/stats.py:spearman_rho):
+    does line-item quantity track extended price?  Midranks doubled to
+    stay integer (the q_rank_sum identity), five Pearson moments over
+    the doubled ranks as exact DECIMAL(38,0), the sqrt dodged by
+    reporting rho2 = (num/d1)*(num/d2) plus the sign (the q_autocorr
+    contract).  Each axis collapses to its distinct-value table + the
+    bounded two-level bucket prefix — no raw-row rank window at
+    100 TB."""
+    from npm_mirror_spark.operators.stats import spearman_rho
+
+    li = _t(spark, sf_dir, "lineitem")
+    return nodec(spearman_rho(li, "l_quantity", "l_extendedprice"))
+
+
+# q_spearman: midranks doubled to stay integer (2r = 2*below + ties + 1),
+# five HUGEINT moments over the doubled ranks, rho2/sign at the end —
+# the q_rank_sum prefix identity restated per axis.  The final
+# num/d1/d2 exceed 2^53 at sf0.1, and DuckDB's direct HUGEINT->DOUBLE
+# cast DOUBLE-ROUNDS (upper*2^64 + lower, two roundings — the r9 sweep
+# caught rho2 off by ulps) while Spark's decimal->double is correctly
+# rounded; routing the conversion through VARCHAR makes DuckDB use its
+# correctly-rounded string parser, restoring bit parity.
+_SPEARMAN_SQL = """
+WITH r0 AS (
+  SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem
+  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
+vx AS (SELECT x, count(*) AS c FROM r0 GROUP BY 1),
+px AS (
+  SELECT x,
+         2 * coalesce(sum(c) OVER (ORDER BY x
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           + c + 1 AS rx
+  FROM vx),
+vy AS (SELECT y, count(*) AS c FROM r0 GROUP BY 1),
+py AS (
+  SELECT y,
+         2 * coalesce(sum(c) OVER (ORDER BY y
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           + c + 1 AS ry
+  FROM vy),
+j AS (SELECT px.rx, py.ry FROM r0 JOIN px USING (x) JOIN py USING (y)),
+m AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_rows,
+         sum(CAST(rx AS HUGEINT)) AS s_rx,
+         sum(CAST(ry AS HUGEINT)) AS s_ry,
+         sum(CAST(rx AS HUGEINT) * CAST(rx AS HUGEINT)) AS s_rxx,
+         sum(CAST(ry AS HUGEINT) * CAST(ry AS HUGEINT)) AS s_ryy,
+         sum(CAST(rx AS HUGEINT) * CAST(ry AS HUGEINT)) AS s_rxy
+  FROM j),
+r AS (
+  SELECT *,
+         CAST(n_rows AS HUGEINT) * s_rxy - s_rx * s_ry AS rho_num,
+         CAST(n_rows AS HUGEINT) * s_rxx - s_rx * s_rx AS rho_d1,
+         CAST(n_rows AS HUGEINT) * s_ryy - s_ry * s_ry AS rho_d2
+  FROM m)
+SELECT n_rows,
+       CAST(CAST(s_rx AS VARCHAR) AS DOUBLE) AS s_rx,
+       CAST(CAST(s_ry AS VARCHAR) AS DOUBLE) AS s_ry,
+       CAST(CAST(s_rxx AS VARCHAR) AS DOUBLE) AS s_rxx,
+       CAST(CAST(s_ryy AS VARCHAR) AS DOUBLE) AS s_ryy,
+       CAST(CAST(s_rxy AS VARCHAR) AS DOUBLE) AS s_rxy,
+       CAST(CAST(rho_num AS VARCHAR) AS DOUBLE) AS rho_num,
+       CAST(CAST(rho_d1 AS VARCHAR) AS DOUBLE) AS rho_d1,
+       CAST(CAST(rho_d2 AS VARCHAR) AS DOUBLE) AS rho_d2,
+       (CAST(CAST(rho_num AS VARCHAR) AS DOUBLE)
+          / CAST(CAST(rho_d1 AS VARCHAR) AS DOUBLE))
+         * (CAST(CAST(rho_num AS VARCHAR) AS DOUBLE)
+              / CAST(CAST(rho_d2 AS VARCHAR) AS DOUBLE)) AS rho2,
+       CAST(sign(CAST(CAST(rho_num AS VARCHAR) AS DOUBLE)) AS INTEGER)
+         AS rho_sign
+FROM r
+"""
+
+
+def q_runs_test(spark, sf_dir):
+    """Wald–Wolfowitz runs test (operators/stats.py:runs_test_daily)
+    over the daily order-count series: sign each day against the exact
+    lower median (distinct-value prefix, no sort), drop exact-median
+    days, count sign runs via lag over the bounded calendar-day axis.
+    All exact counts — the randomness check beside q_cusum's
+    change-point and q_autocorr's persistence."""
+    from npm_mirror_spark.operators.stats import runs_test_daily
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return runs_test_daily(daily, "day", "n")
+
+
+# q_runs_test: lower median = smallest value whose prefix count reaches
+# ceil(n/2); exact-median days drop; run starts are lag transitions.
+_RUNS_TEST_SQL = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
+  FROM orders GROUP BY 1),
+g AS (
+  SELECT date_diff('day', DATE '1970-01-01', day) AS d, n FROM daily),
+v AS (SELECT n AS x, count(*) AS c FROM g GROUP BY 1),
+p AS (
+  SELECT x, c,
+         coalesce(sum(c) OVER (ORDER BY x
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+  FROM v),
+t AS (SELECT count(*) AS nn FROM g),
+med AS (
+  SELECT min(x) AS m FROM p CROSS JOIN t
+  WHERE below + c >= CAST(ceil(nn / 2.0) AS BIGINT)),
+s AS (
+  SELECT d, CASE WHEN n > m THEN 1 ELSE -1 END AS sg, m
+  FROM g CROSS JOIN med WHERE n <> m),
+r AS (
+  SELECT sg, m,
+         CASE WHEN lag(sg) OVER (ORDER BY d) IS NULL
+                OR lag(sg) OVER (ORDER BY d) <> sg
+              THEN 1 ELSE 0 END AS st
+  FROM s)
+SELECT CAST(sum(CASE WHEN sg > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_plus,
+       CAST(sum(CASE WHEN sg < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_minus,
+       CAST(sum(st) AS BIGINT) AS n_runs,
+       max(m) AS median_x
+FROM r
+"""
+
+
+def q_mann_kendall(spark, sf_dir):
+    """Mann–Kendall monotone-trend statistic (operators/stats.py:
+    mann_kendall_daily) over daily order counts: S = sum of
+    sign(x_j - x_i) over day pairs — quadratic ONLY on the bounded
+    calendar-day axis (raw rows collapse to one row per day first), so
+    the broadcast non-equi pair join is a bounded wedge.  Exact
+    integers; the one IEEE division is the dominance effect size."""
+    from npm_mirror_spark.operators.stats import mann_kendall_daily
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return mann_kendall_daily(daily, "day", "n")
+
+
+# q_mann_kendall: S over day pairs on the bounded day axis; ties
+# contribute zero; one division for the dominance effect size.
+_MANN_KENDALL_SQL = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
+  FROM orders GROUP BY 1),
+g AS (
+  SELECT date_diff('day', DATE '1970-01-01', day) AS d, n FROM daily),
+pairs AS (
+  SELECT a.n AS xa, b.n AS xb FROM g a JOIN g b ON b.d > a.d),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+         CAST(sum(CASE WHEN xb > xa THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_concordant,
+         CAST(sum(CASE WHEN xb < xa THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_discordant,
+         CAST(sum(CASE WHEN xb = xa THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_ties
+  FROM pairs),
+t AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM g)
+SELECT n_days, n_pairs,
+       n_concordant - n_discordant AS s_stat,
+       n_concordant, n_discordant, n_ties,
+       CAST(n_concordant - n_discordant AS DOUBLE)
+         / CAST(n_pairs AS DOUBLE) AS s_over_pairs
+FROM agg CROSS JOIN t
+"""
+
+
+def q_theilsen(spark, sf_dir):
+    """Theil–Sen robust slope of daily order counts (operators/stats.py:
+    theil_sen_daily): the exact lower median of all pairwise day-slopes —
+    HOW STEEP is the trend q_mann_kendall detects, with a 29% breakdown
+    point where q_trend_by_group's least-squares fit has zero.  Each
+    slope is one IEEE division of exact ints (identical doubles in both
+    engines); the median is rank selection over the distinct-slope axis
+    via the bounded two-level prefix — pairs are quadratic ONLY over the
+    bounded calendar-day axis (the mann_kendall wedge contract)."""
+    from npm_mirror_spark.operators.stats import theil_sen_daily
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return theil_sen_daily(daily, "day", "n")
+
+
+# q_theilsen: pairwise day-slopes as single IEEE divisions of exact
+# ints, lower median by distinct-slope prefix rank selection.
+_THEILSEN_SQL = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
+  FROM orders GROUP BY 1),
+g AS (
+  SELECT date_diff('day', DATE '1970-01-01', day) AS d, n FROM daily),
+pairs AS (
+  SELECT CAST(b.n - a.n AS DOUBLE) / CAST(b.d - a.d AS DOUBLE) AS slope
+  FROM g a JOIN g b ON b.d > a.d),
+v AS (SELECT slope, count(*) AS c FROM pairs GROUP BY 1),
+p AS (
+  SELECT slope, c,
+         coalesce(sum(c) OVER (ORDER BY slope
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+  FROM v),
+t AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM pairs),
+nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM g)
+SELECT nd.n_days, t.n_pairs,
+       (SELECT min(slope) FROM p CROSS JOIN t
+        WHERE below + c >= CAST(ceil(n_pairs / 2.0) AS BIGINT))
+         AS median_slope
+FROM nd CROSS JOIN t
+"""
+
+
+def q_mad_outliers(spark, sf_dir):
+    """Per-language robust outlier audit over document lengths
+    (operators/stats.py:mad_outliers_by): exact lower median, exact MAD
+    (median absolute deviation), and the |x - med| > 3*MAD outlier
+    count — all integer arithmetic until the reported fraction; the
+    robust gate a mean/stddev z-score can't provide under heavy tails
+    (the outliers drag the stddev that should flag them).  Grouped
+    distinct-value prefix windows only — per-partition rows bounded by
+    the value domain, never the corpus."""
+    from npm_mirror_spark.operators.stats import mad_outliers_by
+
+    d = _t(spark, sf_dir, "documents")
+    return mad_outliers_by(d, "lang", "n_chars", k=3)
+
+
+# q_mad_outliers: grouped lower medians off the per-group distinct-value
+# prefix (value axis, then deviation axis), exact integer outlier gate.
+_MAD_OUTLIERS_SQL = """
+WITH g AS (SELECT lang AS l, n_chars AS x FROM documents),
+t AS (SELECT l, count(*) AS nn FROM g GROUP BY 1),
+v AS (SELECT l, x, count(*) AS c FROM g GROUP BY 1, 2),
+p AS (
+  SELECT l, x, c,
+         coalesce(sum(c) OVER (PARTITION BY l ORDER BY x
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+  FROM v),
+med AS (
+  SELECT p.l, min(x) AS med FROM p JOIN t USING (l)
+  WHERE below + c >= CAST(ceil(nn / 2.0) AS BIGINT) GROUP BY p.l),
+dv AS (SELECT g.l, abs(g.x - med.med) AS d FROM g JOIN med USING (l)),
+v2 AS (SELECT l, d, count(*) AS c FROM dv GROUP BY 1, 2),
+p2 AS (
+  SELECT l, d, c,
+         coalesce(sum(c) OVER (PARTITION BY l ORDER BY d
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+  FROM v2),
+mad AS (
+  SELECT p2.l, min(d) AS mad FROM p2 JOIN t USING (l)
+  WHERE below + c >= CAST(ceil(nn / 2.0) AS BIGINT) GROUP BY p2.l)
+SELECT g.l AS lang,
+       CAST(count(*) AS BIGINT) AS n,
+       max(med.med) AS median,
+       max(mad.mad) AS mad,
+       CAST(sum(CASE WHEN abs(g.x - med.med) > 3 * mad.mad
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
+       CAST(sum(CASE WHEN abs(g.x - med.med) > 3 * mad.mad
+                     THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         AS outlier_frac
+FROM g JOIN med USING (l) JOIN mad USING (l)
+GROUP BY 1
+"""
+
+
+def q_welch_t(spark, sf_dir):
+    """Welch's unequal-variance t-test (operators/stats.py:welch_t)
+    between English and non-English document lengths — the PARAMETRIC
+    twin of q_rank_sum on the same split: rank_sum asks "is one
+    distribution stochastically larger", this asks "do the MEANS differ,
+    variances unpooled", reported sqrt-free (t^2 + Welch-Satterthwaite
+    df).  One scan, one 6-column map-side fold, 1-row output; every
+    float is a fixed IEEE sequence on exact DECIMAL(38,0) ingredients
+    (the q_kappa contract), so the oracle matches bit-for-bit."""
+    from npm_mirror_spark.operators.stats import welch_t
+
+    d = _t(spark, sf_dir, "documents")
+    return nodec(welch_t(d, "n_chars", F.col("lang") == "en"))
+
+
+# q_welch_t: exact HUGEINT ingredients, VARCHAR-routed to double, then
+# the IDENTICAL IEEE expression tree as operators/stats.py:welch_t.
+# Group B via IS DISTINCT FROM: a NULL-lang row lands in group B, the
+# operator's coalesce(in_a, FALSE) convention (NULL-counts-as-negative).
+_WELCH_T_SQL = """
+WITH agg AS (
+  SELECT
+    CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT) AS n1,
+    CAST(count(*) FILTER (WHERE lang IS DISTINCT FROM 'en') AS BIGINT) AS n2,
+    sum(CASE WHEN lang = 'en' THEN CAST(n_chars AS HUGEINT) ELSE 0 END) AS s1,
+    sum(CASE WHEN lang IS DISTINCT FROM 'en'
+         THEN CAST(n_chars AS HUGEINT) ELSE 0 END) AS s2,
+    sum(CASE WHEN lang = 'en'
+         THEN CAST(n_chars AS HUGEINT) * CAST(n_chars AS HUGEINT)
+         ELSE 0 END) AS q1,
+    sum(CASE WHEN lang IS DISTINCT FROM 'en'
+         THEN CAST(n_chars AS HUGEINT) * CAST(n_chars AS HUGEINT)
+         ELSE 0 END) AS q2
+  FROM documents WHERE n_chars IS NOT NULL),
+m AS (
+  SELECT n1, n2,
+    CAST(CAST(s1 AS VARCHAR) AS DOUBLE) / CAST(n1 AS DOUBLE) AS m1,
+    CAST(CAST(s2 AS VARCHAR) AS DOUBLE) / CAST(n2 AS DOUBLE) AS m2,
+    CAST(CAST(n1 * q1 - s1 * s1 AS VARCHAR) AS DOUBLE)
+      / CAST(CAST(CAST(n1 AS HUGEINT) * CAST(n1 - 1 AS HUGEINT)
+                  AS VARCHAR) AS DOUBLE) AS v1,
+    CAST(CAST(n2 * q2 - s2 * s2 AS VARCHAR) AS DOUBLE)
+      / CAST(CAST(CAST(n2 AS HUGEINT) * CAST(n2 - 1 AS HUGEINT)
+                  AS VARCHAR) AS DOUBLE) AS v2
+  FROM agg),
+s AS (
+  SELECT *, v1 / CAST(n1 AS DOUBLE) AS se1, v2 / CAST(n2 AS DOUBLE) AS se2
+  FROM m)
+SELECT n1, n2, m1 AS mean_a, m2 AS mean_b, v1 AS var_a, v2 AS var_b,
+       ((m1 - m2) * (m1 - m2)) / (se1 + se2) AS t2,
+       ((se1 + se2) * (se1 + se2))
+         / ((se1 * se1) / CAST(n1 - 1 AS DOUBLE)
+            + (se2 * se2) / CAST(n2 - 1 AS DOUBLE)) AS welch_df
+FROM s
+"""
+
+
+def q_kruskal(spark, sf_dir):
+    """Kruskal-Wallis rank decomposition per language
+    (operators/stats.py:kruskal_cells) over document lengths — the
+    k-sample generalization of q_rank_sum: does at least one language's
+    length distribution sit apart?  Emits PER-GROUP H contributions
+    (rank_sum_x2, mean_rank, h_term) instead of their float sum — the
+    one op two engines could round differently — so the face is exact
+    while H and the tie correction stay one-liner derivations.  Bounded
+    two-level prefix over the distinct-length axis; no raw-row
+    window."""
+    from npm_mirror_spark.operators.stats import kruskal_cells
+
+    d = _t(spark, sf_dir, "documents")
+    return nodec(kruskal_cells(d, "n_chars", "lang"))
+
+
+# q_kruskal: doubled-midrank identity replayed on the distinct-length
+# axis; per-group exact HUGEINT rank sums, VARCHAR-routed doubles.
+_KRUSKAL_SQL = """
+WITH g AS (
+  SELECT lang AS grp, n_chars AS x FROM documents WHERE n_chars IS NOT NULL),
+vg AS (SELECT grp, x, count(*) AS cg FROM g GROUP BY 1, 2),
+vals AS (SELECT x, CAST(sum(cg) AS BIGINT) AS c FROM vg GROUP BY 1),
+pri AS (
+  SELECT x, c,
+         coalesce(sum(c) OVER (ORDER BY x
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS b
+  FROM vals),
+per AS (
+  SELECT vg.grp, CAST(sum(vg.cg) AS BIGINT) AS n_i,
+         sum(CAST(vg.cg AS HUGEINT) * CAST(2 * p.b + p.c + 1 AS HUGEINT))
+           AS r2
+  FROM vg JOIN pri p ON p.x = vg.x
+  GROUP BY vg.grp),
+tot AS (
+  SELECT CAST(sum(c) AS BIGINT) AS n_total,
+         sum(CAST(c AS HUGEINT) * CAST(c AS HUGEINT) * CAST(c AS HUGEINT)
+             - CAST(c AS HUGEINT)) AS tc
+  FROM vals)
+SELECT grp AS lang, n_i,
+       CAST(CAST(r2 AS VARCHAR) AS DOUBLE) AS rank_sum_x2,
+       CAST(CAST(r2 AS VARCHAR) AS DOUBLE) / CAST(2 * n_i AS DOUBLE)
+         AS mean_rank,
+       (CAST(CAST(r2 AS VARCHAR) AS DOUBLE)
+        * CAST(CAST(r2 AS VARCHAR) AS DOUBLE))
+         / CAST(4 * n_i AS DOUBLE) AS h_term,
+       n_total,
+       CAST(CAST(tc AS VARCHAR) AS DOUBLE) AS tie_cubes
+FROM per CROSS JOIN tot
+ORDER BY lang
+"""
+
+
+def q_kendall_tau(spark, sf_dir):
+    """Kendall tau-b between daily order VOLUME and daily distinct-
+    customer BREADTH (operators/stats.py:kendall_tau_daily): do
+    high-volume days draw proportionally more customers, judged only by
+    pair order?  The monotone-association companion to q_spearman
+    (rank-linear) and q_mann_kendall (trend-vs-time): exact
+    concordant/discordant/tie counting over the bounded calendar-day
+    wedge (raw orders collapse to one row per day FIRST, the day side
+    broadcasts), sqrt-free tau-b report."""
+    from npm_mirror_spark.operators.stats import kendall_tau_daily
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.count_distinct("o_custkey").alias("n_customers"),
+    )
+    return kendall_tau_daily(daily, "day", "n_orders", "n_customers")
+
+
+# q_kendall_tau: bounded day-axis pair wedge, exact tie-aware counts,
+# sqrt-free signed tau-b square.  The outer NULL filter replays the
+# operator's up-front exclusion of NULL day/measure rows (no-op on
+# clean data: x/y are COUNTs here).
+_KENDALL_TAU_SQL = """
+WITH g AS (
+  SELECT * FROM (
+    SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS d,
+           CAST(count(*) AS BIGINT) AS x,
+           CAST(count(DISTINCT o_custkey) AS BIGINT) AS y
+    FROM orders GROUP BY 1)
+  WHERE d IS NOT NULL AND x IS NOT NULL AND y IS NOT NULL),
+p AS (
+  SELECT b.x - a.x AS dx, b.y - a.y AS dy
+  FROM g a JOIN g b ON b.d > a.d),
+agg AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+         CAST(sum(CASE WHEN (dx > 0 AND dy > 0) OR (dx < 0 AND dy < 0)
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_concordant,
+         CAST(sum(CASE WHEN (dx > 0 AND dy < 0) OR (dx < 0 AND dy > 0)
+                       THEN 1 ELSE 0 END) AS BIGINT) AS n_discordant,
+         CAST(sum(CASE WHEN dx = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ties_x,
+         CAST(sum(CASE WHEN dy = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ties_y
+  FROM p),
+nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM g)
+SELECT n_days, n_pairs, n_concordant, n_discordant, ties_x, ties_y,
+       n_concordant - n_discordant AS tau_num,
+       sign(CAST(n_concordant - n_discordant AS DOUBLE))
+         * (CAST(n_concordant - n_discordant AS DOUBLE)
+            * CAST(n_concordant - n_discordant AS DOUBLE))
+         / (CAST(n_pairs - ties_x AS DOUBLE)
+            * CAST(n_pairs - ties_y AS DOUBLE))
+         AS tau_b_sq_signed
+FROM agg CROSS JOIN nd
+"""
+
+
+def q_anova_cells(spark, sf_dir):
+    """One-way ANOVA decomposition of line-item quantity by return flag
+    (operators/stats.py:anova_cells) — the parametric k-sample
+    companion to q_kruskal: per-flag n_i, exact sums, within-group SS
+    and the between-group term, each a fixed IEEE sequence on exact
+    DECIMAL(38,0) ingredients (quantities are integral, cast to long),
+    so F = (Sum between/(k-1))/(Sum within/(N-k)) is a one-liner
+    derivation and the face never sums floats across data-dependent
+    group order.  One grouped fold + a broadcast 1-row totals frame."""
+    from npm_mirror_spark.operators.stats import anova_cells
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_returnflag", F.col("l_quantity").cast("long").alias("qty")
+    )
+    return nodec(anova_cells(li, "qty", "l_returnflag"))
+
+
+# q_anova_cells: exact HUGEINT (n, S, Q) per flag, VARCHAR-routed,
+# identical IEEE tree as operators/stats.py:anova_cells.
+_ANOVA_CELLS_SQL = """
+WITH g AS (
+  SELECT l_returnflag AS grp, CAST(l_quantity AS BIGINT) AS x
+  FROM lineitem WHERE l_quantity IS NOT NULL),
+per AS (
+  SELECT grp, CAST(count(*) AS BIGINT) AS n_i,
+         sum(CAST(x AS HUGEINT)) AS s,
+         sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS q
+  FROM g GROUP BY 1),
+tot AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_total, sum(CAST(x AS HUGEINT)) AS st
+  FROM g),
+m AS (
+  SELECT per.grp, per.n_i, per.s, per.q, tot.n_total,
+         CAST(CAST(per.s AS VARCHAR) AS DOUBLE) / CAST(per.n_i AS DOUBLE)
+           AS mean_i,
+         CAST(CAST(tot.st AS VARCHAR) AS DOUBLE) / CAST(tot.n_total AS DOUBLE)
+           AS grand_mean
+  FROM per CROSS JOIN tot)
+SELECT grp AS l_returnflag, n_i,
+       CAST(CAST(s AS VARCHAR) AS DOUBLE) AS sum_i,
+       mean_i,
+       CAST(CAST(n_i * q - s * s AS VARCHAR) AS DOUBLE)
+         / CAST(n_i AS DOUBLE) AS within_ss,
+       CAST(n_i AS DOUBLE) * ((mean_i - grand_mean) * (mean_i - grand_mean))
+         AS between_term,
+       n_total, grand_mean
+FROM m
+ORDER BY l_returnflag
+"""
+
+
+def q_poisson_bootstrap(spark, sf_dir):
+    """Deterministic Poisson bootstrap of mean document length
+    (operators/stats.py:poisson_bootstrap_mean, B=32): the bootstrap
+    that scales — per-row Poisson(1) weights from the md5 key contract
+    decide every resample in ONE pass (no row fan-out: a single
+    64-column map-side fold + a 1-row stack), and the hard-coded
+    inverse-CDF literals make both engines draw IDENTICAL resamples.
+    Output is the bootstrap distribution (n_eff, exact weighted sum,
+    mean per resample); any CI quantile is a one-liner on 32 rows."""
+    from npm_mirror_spark.operators.stats import poisson_bootstrap_mean
+
+    d = _t(spark, sf_dir, "documents")
+    return nodec(poisson_bootstrap_mean(d, "doc_id", "n_chars", 32))
+
+
+# q_poisson_bootstrap: the md5 key contract replayed per (row, resample),
+# the SAME hard-coded Poisson(1) CDF literals, exact HUGEINT sums.
+_POISSON_BOOTSTRAP_SQL = """
+WITH b AS (SELECT unnest(generate_series(0, 31)) AS r),
+u AS (
+  SELECT b.r, d.n_chars,
+         CAST(('0x' || substr(md5(CAST(b.r // 5 AS VARCHAR) || ':'
+                || CAST(d.doc_id AS VARCHAR)), (b.r % 5) * 6 + 1, 6))::BIGINT
+              AS DOUBLE)
+           / CAST(16777216 AS DOUBLE) AS u
+  FROM documents d CROSS JOIN b),
+w AS (
+  SELECT r, n_chars,
+         CASE WHEN u < 0.36787944117144233 THEN 0
+              WHEN u < 0.7357588823428847 THEN 1
+              WHEN u < 0.9196986029286058 THEN 2
+              WHEN u < 0.9810118431238462 THEN 3
+              WHEN u < 0.9963401531726563 THEN 4
+              WHEN u < 0.9994058151824183 THEN 5
+              WHEN u < 0.9999167588507119 THEN 6
+              ELSE 7 END AS w
+  FROM u)
+SELECT CAST(r AS INTEGER) AS resample,
+       CAST(sum(w) AS BIGINT) AS n_eff,
+       CAST(CAST(sum(CAST(w AS HUGEINT) * CAST(n_chars AS HUGEINT))
+                 AS VARCHAR) AS DOUBLE) AS sum_wx,
+       CAST(CAST(sum(CAST(w AS HUGEINT) * CAST(n_chars AS HUGEINT))
+                 AS VARCHAR) AS DOUBLE)
+         / CAST(sum(w) AS DOUBLE) AS mean
+FROM w GROUP BY r ORDER BY resample
+"""

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from npm_mirror_spark.faces import Face
+from npm_mirror_spark.faces import nodec
 from npm_mirror_spark.tables import load_table as _t
 
 
@@ -728,19 +728,347 @@ FROM p2
 """
 
 
-#: (name, face, oracle, staged) — ``faces.ORDER`` sets the sequence.
-FACES = (
-    Face("q_km_events", q_km_events, _KM_EVENTS_SQL, False),
-    Face("q_logrank", q_logrank, _LOGRANK_SQL, False),
-    Face("q_pettitt", q_pettitt, _PETTITT_SQL, False),
-    Face("q_aalen_johansen", q_aalen_johansen, _AJ_SQL, False),
-    Face("q_cox_stuart", q_cox_stuart, _COX_STUART_SQL, False),
-    Face("q_seasonal_mk", q_seasonal_mk, _SEASONAL_MK_SQL, False),
-    Face("q_buishand", q_buishand, _BUISHAND_SQL, False),
-    Face("q_nelson_aalen", q_nelson_aalen, _NELSON_AALEN_SQL, False),
-    Face("q_gehan", q_gehan, _GEHAN_SQL, False),
-    Face("q_turning_point", q_turning_point, _TURNING_SQL, True),
-    Face("q_bartels_rvn", q_bartels_rvn, _BARTELS_SQL, True),
-    Face("q_morans_i", q_morans_i, _MORANS_SQL, True),
-    Face("q_pacf", q_pacf, _PACF_SQL, True),
-)
+def q_asof_plain(spark, sf_dir):
+    """The composition form of the as-of join (equi-join + argmax window):
+    exactness baseline for q_asof_join's bucketed plan. Fan-out is
+    O(history) per event — fine at validation scale, not the 100 TB plan."""
+    from npm_mirror_spark.operators.temporal import asof_join
+
+    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    o = (
+        _t(spark, sf_dir, "orders")
+        .select(
+            F.col("o_custkey").alias("user_id"),
+            F.col("o_orderdate").alias("last_order_date"),
+            F.col("o_orderkey").alias("last_order_key"),
+        )
+    )
+    return asof_join(
+        ev,
+        o,
+        on="user_id",
+        left_ts="ts",
+        right_ts="last_order_date",
+        right_cols=["last_order_date", "last_order_key"],
+        tiebreak=["last_order_key"],
+    )
+
+
+# same semantics, same oracle — the two registered Spark forms differ
+# only in join topology (bucketed vs composition)
+_ASOF_PLAIN_SQL = """
+SELECT event_id, user_id, ts, last_order_date, last_order_key FROM (
+  SELECT e.event_id, e.user_id, e.ts,
+         o.o_orderdate AS last_order_date, o.o_orderkey AS last_order_key,
+         row_number() OVER (PARTITION BY e.event_id
+           ORDER BY o.o_orderdate DESC NULLS LAST,
+                    o.o_orderkey DESC NULLS LAST) AS rn
+  FROM events e
+  LEFT JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
+WHERE rn = 1
+"""
+
+
+def q_range_join(spark, sf_dir):
+    """Range (interval) join: pairs of same-user events within 10 minutes
+    forward — operators/temporal.py equi+range composition."""
+    from npm_mirror_spark.operators.temporal import range_join
+
+    ev = _t(spark, sf_dir, "events")
+    a = ev.select("event_id", "user_id", "ts")
+    b = ev.select(
+        F.col("user_id"),
+        F.col("ts").alias("ts2"),
+        F.col("event_id").alias("next_event_id"),
+    )
+    pairs = range_join(
+        a,
+        b,
+        on="user_id",
+        left_ts="ts",
+        right_ts="ts2",
+        lower=F.expr("INTERVAL 0 SECONDS"),
+        upper=F.expr("INTERVAL 10 MINUTES"),
+    ).filter(F.col("next_event_id") != F.col("event_id"))
+    return pairs.select(
+        "event_id",
+        "next_event_id",
+        (F.unix_micros(F.col("ts2")) - F.unix_micros(F.col("ts"))).alias("gap_us"),
+    )
+
+
+_RANGE_JOIN_SQL = """
+SELECT a.event_id, b.event_id AS next_event_id,
+       epoch_us(b.ts) - epoch_us(a.ts) AS gap_us
+FROM events a JOIN events b
+  ON a.user_id = b.user_id
+ AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTES
+ AND b.event_id != a.event_id
+"""
+
+
+def q_asof_join(spark, sf_dir):
+    """As-of join (no native Spark operator): for each event, the latest
+    order of the same customer at-or-before the event time.
+
+    Registered as the BUCKETED form (operators/temporal.py:asof_join_bucketed):
+    each event meets only same-(customer, month-bucket) orders plus one
+    pre-aggregated latest-before-bucket row, so join fan-out is O(bucket
+    occupancy) instead of O(order history) — the form that survives 100 TB.
+    q_asof_plain registers the composition form against the same oracle as
+    the cross-validation twin."""
+    from npm_mirror_spark.operators.temporal import asof_join_bucketed
+
+    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    o = (
+        _t(spark, sf_dir, "orders")
+        .select(
+            F.col("o_custkey").alias("user_id"),
+            F.col("o_orderdate").alias("last_order_date"),
+            F.col("o_orderkey").alias("last_order_key"),
+        )
+    )
+    return asof_join_bucketed(
+        ev,
+        o,
+        on="user_id",
+        left_ts="ts",
+        right_ts="last_order_date",
+        right_cols=["last_order_date", "last_order_key"],
+        tiebreak=["last_order_key"],
+        bucket_seconds=30 * 86_400,
+    )
+
+
+_ASOF_JOIN_SQL = """
+SELECT event_id, user_id, ts, last_order_date, last_order_key FROM (
+  SELECT e.event_id, e.user_id, e.ts,
+         o.o_orderdate AS last_order_date, o.o_orderkey AS last_order_key,
+         row_number() OVER (PARTITION BY e.event_id
+           ORDER BY o.o_orderdate DESC NULLS LAST,
+                    o.o_orderkey DESC NULLS LAST) AS rn
+  FROM events e
+  LEFT JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts)
+WHERE rn = 1
+"""
+
+
+def q_cusum(spark, sf_dir):
+    """CUSUM change-point over the daily order-count series
+    (operators/temporal.py:cusum_changepoint): the day whose prefix sum
+    deviates most from the uniform-rate line, |m*S_k - k*S_m| in exact
+    cross-multiplied integers (no division inside the argmax).  The
+    prefix window orders the bounded calendar-day axis (the
+    q_drift_weekly contract); the (m, total) singleton fold broadcasts.
+    The monitoring primitive behind 'did the feed rate shift?'."""
+    from npm_mirror_spark.operators.temporal import cusum_changepoint
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return nodec(cusum_changepoint(daily, "day", "n"))
+
+
+# q_cusum: |m*S_k - k*S_m| in HUGEINT over the bounded day axis,
+# argmax to the smallest attaining day, one division at the end.
+_CUSUM_SQL = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
+  FROM orders GROUP BY 1),
+g AS (
+  SELECT date_diff('day', DATE '1970-01-01', day) AS d, n FROM daily),
+p AS (
+  SELECT d,
+         sum(n) OVER (ORDER BY d
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
+         row_number() OVER (ORDER BY d) AS k
+  FROM g),
+t AS (SELECT CAST(count(*) AS BIGINT) AS m,
+             CAST(sum(n) AS BIGINT) AS total FROM g),
+dev AS (
+  SELECT d,
+         abs(CAST(t.m AS HUGEINT) * CAST(s AS HUGEINT)
+             - CAST(k AS HUGEINT) * CAST(t.total AS HUGEINT)) AS dev
+  FROM p CROSS JOIN t)
+SELECT t.m, t.total,
+       CAST((SELECT min(d) FROM dev WHERE dev = (SELECT max(dev) FROM dev))
+            AS INTEGER) AS day_star,
+       CAST(CAST((SELECT max(dev) FROM dev) AS VARCHAR) AS DOUBLE)
+         AS dev_num,
+       CAST(CAST((SELECT max(dev) FROM dev) AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(CAST(t.m AS HUGEINT) * CAST(t.total AS HUGEINT)
+                     AS VARCHAR) AS DOUBLE)
+         AS dev_frac
+FROM t
+"""
+
+
+def q_autocorr(spark, sf_dir):
+    """Lag-1 autocorrelation of daily order counts
+    (operators/temporal.py:autocorr1_daily): consecutive-day pairs via
+    a self-EQUI-join on day+1 (no window), five Pearson moments as
+    exact DECIMAL(38,0) folds, and the sqrt dodged by reporting
+    r2 = (num/d1)*(num/d2) plus the sign — same information, three
+    deterministic IEEE ops.  The seasonality detector feeding
+    q_seasonal_outliers' bucket choice."""
+    from npm_mirror_spark.operators.temporal import autocorr1_daily
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return nodec(autocorr1_daily(daily, "day", "n"))
+
+
+# q_autocorr: consecutive-day pairs by equi-join on day+1, five exact
+# HUGEINT moments, r2 = (num/d1)*(num/d2) and the sign — sqrt-free.
+_AUTOCORR_SQL = """
+WITH daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
+  FROM orders GROUP BY 1),
+g AS (
+  SELECT date_diff('day', DATE '1970-01-01', day) AS d, n FROM daily),
+pairs AS (
+  SELECT a.n AS x, b.n AS y FROM g a JOIN g b ON b.d = a.d + 1),
+m AS (
+  SELECT CAST(count(*) AS BIGINT) AS m_pairs,
+         sum(CAST(x AS HUGEINT)) AS s_x,
+         sum(CAST(y AS HUGEINT)) AS s_y,
+         sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS s_xx,
+         sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS s_yy,
+         sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS s_xy
+  FROM pairs),
+r AS (
+  SELECT *,
+         CAST(m_pairs AS HUGEINT) * s_xy - s_x * s_y AS r_num,
+         CAST(m_pairs AS HUGEINT) * s_xx - s_x * s_x AS d1,
+         CAST(m_pairs AS HUGEINT) * s_yy - s_y * s_y AS d2
+  FROM m)
+SELECT m_pairs,
+       CAST(CAST(s_x AS VARCHAR) AS DOUBLE) AS s_x,
+       CAST(CAST(s_y AS VARCHAR) AS DOUBLE) AS s_y,
+       CAST(CAST(s_xx AS VARCHAR) AS DOUBLE) AS s_xx,
+       CAST(CAST(s_yy AS VARCHAR) AS DOUBLE) AS s_yy,
+       CAST(CAST(s_xy AS VARCHAR) AS DOUBLE) AS s_xy,
+       CAST(CAST(r_num AS VARCHAR) AS DOUBLE) AS r_num,
+       CAST(CAST(d1 AS VARCHAR) AS DOUBLE) AS d1,
+       CAST(CAST(d2 AS VARCHAR) AS DOUBLE) AS d2,
+       (CAST(CAST(r_num AS VARCHAR) AS DOUBLE)
+          / CAST(CAST(d1 AS VARCHAR) AS DOUBLE))
+         * (CAST(CAST(r_num AS VARCHAR) AS DOUBLE)
+              / CAST(CAST(d2 AS VARCHAR) AS DOUBLE)) AS r2,
+       CAST(sign(CAST(CAST(r_num AS VARCHAR) AS DOUBLE)) AS INTEGER)
+         AS r_sign
+FROM r
+"""
+
+
+def q_interval_coverage(spark, sf_dir):
+    """Overlapping-interval union per supplier
+    (operators/temporal.py:interval_coverage_days): each lineitem opens
+    a [shipdate, shipdate + quantity days] service window; the report
+    merges overlaps into covered-day counts, island counts and span
+    bounds per supplier.  The gaps-and-islands problem as a BOUNDARY
+    SWEEP: 2 delta rows per interval (+1 at start, -1 past end, clamped
+    by max_days), one (key, day) int-sum groupBy, one per-key window
+    over the bounded calendar-day axis (the q_drift_weekly contract) —
+    no day-grain explode, no per-key ordered window over raw intervals.
+    Epoch-day integers, timezone-proof."""
+    from npm_mirror_spark.operators.temporal import interval_coverage_days
+
+    li = _t(spark, sf_dir, "lineitem")
+    return interval_coverage_days(
+        li,
+        "l_suppkey",
+        F.col("l_shipdate").cast("date"),
+        F.floor(F.col("l_quantity")).cast("int"),
+        max_days=60,
+    ).orderBy("l_suppkey")
+
+
+# q_interval_coverage: bounded day-grain explode via generate_series,
+# distinct union, island starts as the predecessor-day NOT EXISTS.
+_INTERVAL_COVERAGE_SQL = """
+WITH iv AS (
+  SELECT l_suppkey AS k,
+         date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
+           AS d0,
+         least(CAST(floor(l_quantity) AS INTEGER), 60) AS nd
+  FROM lineitem),
+days AS (
+  SELECT DISTINCT k, d0 + i AS day
+  FROM iv, unnest(generate_series(0, nd)) AS t(i)),
+starts AS (
+  SELECT d.k, d.day FROM days d
+  WHERE NOT EXISTS (
+    SELECT 1 FROM days p WHERE p.k = d.k AND p.day = d.day - 1)),
+cov AS (
+  SELECT k, count(*) AS covered_days,
+         min(day) AS first_day, max(day) AS last_day
+  FROM days GROUP BY k),
+isl AS (SELECT k, count(*) AS n_islands FROM starts GROUP BY k)
+SELECT cov.k AS l_suppkey, covered_days, n_islands,
+       CAST(first_day AS INTEGER) AS first_day,
+       CAST(last_day AS INTEGER) AS last_day
+FROM cov JOIN isl USING (k)
+ORDER BY l_suppkey
+"""
+
+
+def q_changepoint(spark, sf_dir):
+    """Binary-segmentation change-point on daily order counts
+    (operators/temporal.py:binseg_changepoint): the least-squares best
+    split day and the variance it explains — q_cusum locates the max
+    prefix deviation, this reports the mean-shift segmentation a
+    recursion would commit.  Exact DECIMAL(38,0) SSE numerators off the
+    bounded day-axis prefix, fixed two-division IEEE cost,
+    deterministic (cost, day) struct-min (the q_gini_split pattern on
+    the time axis)."""
+    from npm_mirror_spark.operators.temporal import binseg_changepoint
+
+    o = _t(spark, sf_dir, "orders")
+    daily = o.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return nodec(binseg_changepoint(daily, "day", "n"))
+
+
+# q_changepoint: cumulative (S, Q) prefix replay on the day axis, exact
+# HUGEINT SSE numerators (VARCHAR-routed), argmin by (cost, day).
+_CHANGEPOINT_SQL = """
+WITH daily AS (
+  SELECT date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS d,
+         CAST(count(*) AS BIGINT) AS x
+  FROM orders GROUP BY 1),
+pre AS (
+  SELECT d,
+         CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS k,
+         sum(CAST(x AS HUGEINT)) OVER win AS sl,
+         sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) OVER win AS ql
+  FROM daily
+  WINDOW win AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+tot AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_days,
+         sum(CAST(x AS HUGEINT)) AS s,
+         sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS q
+  FROM daily),
+scored AS (
+  SELECT n_days, d AS split_day, k AS n_left,
+         CAST(CAST(sl AS VARCHAR) AS DOUBLE) / CAST(k AS DOUBLE) AS mean_left,
+         CAST(CAST(s - sl AS VARCHAR) AS DOUBLE)
+           / CAST(n_days - k AS DOUBLE) AS mean_right,
+         CAST(CAST(CAST(k AS HUGEINT) * ql - sl * sl AS VARCHAR) AS DOUBLE)
+           / CAST(k AS DOUBLE)
+         + CAST(CAST(CAST(n_days - k AS HUGEINT) * (q - ql)
+                     - (s - sl) * (s - sl) AS VARCHAR) AS DOUBLE)
+           / CAST(n_days - k AS DOUBLE) AS sse_split,
+         CAST(CAST(CAST(n_days AS HUGEINT) * q - s * s AS VARCHAR) AS DOUBLE)
+           / CAST(n_days AS DOUBLE) AS sse_total
+  FROM pre CROSS JOIN tot
+  WHERE k < n_days)
+SELECT n_days, CAST(split_day AS INTEGER) AS split_day, n_left,
+       mean_left, mean_right, sse_split, sse_total,
+       sse_total - sse_split AS gain
+FROM scored ORDER BY sse_split, split_day LIMIT 1
+"""

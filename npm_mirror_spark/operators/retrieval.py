@@ -1,7 +1,7 @@
 """Lexical ranked retrieval (BM25) over the documents table.
 
 The missing lexical half of the retrieval stack (the vector half lives in
-operators/similarity.py; queries.q_rrf_fusion fuses the two): given a small
+operators/similarity.py; faces.similarity.q_rrf_fusion fuses the two): given a small
 set of query terms, score every matching document with BM25 and return the
 top-k. This is the workhorse for corpus search, hard-negative mining, and
 the keyword arm of hybrid retrieval over a training corpus.
@@ -23,7 +23,7 @@ Determinism (the driver hash-compares against DuckDB): the registered
 ``idf="rational"`` face uses the log-free Robertson idf argument
 ``(N - df + 0.5) / (df + 0.5)`` so every per-term weight is built purely
 from IEEE +,-,*,/ on identical operands (bit-identical across engines —
-the repo-wide no-libm rule, see queries.py module docstring), then
+the repo-wide no-libm rule, see the faces/__init__.py module docstring), then
 integer-scales each weight with ``floor(w * 1e6)`` so the per-doc SUM is
 an order-free bigint. The standard Lucene ``ln(1 + rational)`` face is
 order-equivalent per term but NOT cross-engine bit-stable (ln differs by

@@ -294,7 +294,7 @@ def grouped_centroids_pandas(
     path (numpy mean per group), for when the per-group math outgrows SQL
     expressions (covariances, PCA steps, medoids...).
 
-    The declarative twin (queries.q_centroids) is preferred when
+    The declarative twin (faces.relational.q_centroids) is preferred when
     expressible: it shuffles (group, dim) pairs instead of whole vectors
     and stays JVM-side. This kernel exists to pin the applyInPandas seam:
     schema contract, Arrow batching, self-contained (cloudpickle-by-value)

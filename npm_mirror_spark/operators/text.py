@@ -389,7 +389,7 @@ def unigram_nll(
 
     NOT oracle-backed: ln/exp are libm calls, not IEEE-exact ops, so
     cross-engine bit-stability cannot be guaranteed (the repo-wide
-    no-libm rule, queries.py module docstring) and a parallel double SUM
+    no-libm rule, faces/__init__.py module docstring) and a parallel double SUM
     is order-dependent besides. Registered as a rows-only query
     (q_lm_nll); value semantics are cross-validated against a
     pure-Python reference in tests/test_lm.py.

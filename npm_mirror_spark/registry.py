@@ -11,7 +11,7 @@ from npm_mirror_spark.queries import ORACLES, QUERIES, STAGED
 
 def all_faces() -> list[tuple[str, Callable, str | None]]:
     """(name, face, oracle SQL or None) for every registered face in
-    ``QUERIES`` order, then every staged face in ``faces.ORDER``."""
+    ``QUERIES`` order, then every staged face in ``faces.table()`` order."""
     return [(n, q, ORACLES.get(n)) for n, q in QUERIES.items()] + STAGED
 
 

@@ -108,6 +108,24 @@ def test_drain_after_crash_between_renames_keeps_stored_rows(spark, tmp_path):
     assert not os.path.exists(store.store_path + "__old")
 
 
+def test_committed_seqs_scan_prunes_content(spark, tmp_path):
+    """The pipeline's dedup against the store reads seqs, never blobs:
+    after an append and a gc, ``drop_committed`` over ``committed_seqs()``
+    scans only ``version_seq`` from the kept rows and from the deletion
+    log, and the executed plan carries no ``content`` column."""
+    from npm_mirror_spark import plans
+    from npm_mirror_spark.sinks import drop_committed
+
+    store = ArtifactStore(spark, str(tmp_path / "store"))
+    store.append(_fake_artifacts(spark))
+    store.gc(limit=5)
+    rows = spark.range(12).select(F.col("id").alias("version_seq"))
+    fresh = drop_committed(rows, store.committed_seqs(), "version_seq", 0)
+    assert sorted(r["version_seq"] for r in fresh.collect()) == [9, 10, 11]
+    assert plans.read_schema_columns(fresh) == [["version_seq"], ["version_seq"]]
+    assert "content" not in fresh._jdf.queryExecution().executedPlan().toString()
+
+
 # -- hypothesis property tests ------------------------------------------------
 
 

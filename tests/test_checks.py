@@ -198,7 +198,8 @@ def test_token_drift_matches_brute_force(spark, sf_dir):
 
     import pandas as pd
 
-    from npm_mirror_spark.queries import QUERIES, _t
+    from npm_mirror_spark.queries import QUERIES
+    from npm_mirror_spark.tables import load_table as _t
 
     got = {r["source"]: r["tv"] for r in QUERIES["q_token_drift"](spark, sf_dir).collect()}
     docs = _t(spark, sf_dir, "documents").select("source", "text").toPandas()

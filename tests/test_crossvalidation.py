@@ -16,7 +16,7 @@ pytestmark = _pytest.mark.slow
 
 from pyspark.sql import functions as F
 
-from npm_mirror_spark.queries import q_approx_stats, q_sessionize
+from npm_mirror_spark.faces.relational import q_approx_stats, q_sessionize
 from npm_mirror_spark.tables import load_table
 
 
@@ -45,7 +45,7 @@ def test_cosine_topk_arrow_agrees_with_hof(spark, sf_dir):
     """The BLAS fast path must return the same neighbor sets as the
     bit-exact HOF form, with cosines equal to float-summation-order
     tolerance (BLAS blocked sums vs sequential aggregate)."""
-    from npm_mirror_spark.queries import q_cosine_topk, q_cosine_topk_arrow
+    from npm_mirror_spark.faces.similarity import q_cosine_topk, q_cosine_topk_arrow
 
     exact = {
         (r["probe_id"], r["neighbor_id"]): r["cos_sim"]
@@ -77,15 +77,16 @@ def test_semdedup_agrees_with_bruteforce_keep_rule(spark, sf_dir):
     shares v's IVF cluster. On this corpus the IVF blocking loses no
     qualifying pair that the keep rule would act on differently — the
     survivors must match the brute evaluation exactly."""
+    from npm_mirror_spark.faces import ivf_centroids
     from npm_mirror_spark.operators.similarity import (
         cosine_dup_pairs,
         ivf_assign,
         semdedup,
     )
-    from npm_mirror_spark.queries import _ivf_centroids, _t
+    from npm_mirror_spark.tables import load_table as _t
 
     e = _t(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(e)
+    cents = ivf_centroids(e)
     survivors = {r["vec_id"] for r in semdedup(e, cents, 0.4).collect()}
 
     cluster = {
@@ -111,8 +112,10 @@ def test_ivf_dup_pairs_subset_of_bruteforce(spark, sf_dir):
     qualifying pairs genuinely split across clusters, which is why the
     brute form stays registered as the size-gated exactness baseline
     instead of being face-swapped onto the IVF plan."""
+    from npm_mirror_spark.faces import ivf_centroids
+    from npm_mirror_spark.faces.similarity import q_ivf_dup_pairs
     from npm_mirror_spark.operators.similarity import cosine_dup_pairs, ivf_assign
-    from npm_mirror_spark.queries import _ivf_centroids, _t, q_ivf_dup_pairs
+    from npm_mirror_spark.tables import load_table as _t
 
     e = _t(spark, sf_dir, "embeddings")
     brute = {
@@ -125,7 +128,7 @@ def test_ivf_dup_pairs_subset_of_bruteforce(spark, sf_dir):
     }
     cluster = {
         r["vec_id"]: r["cluster"]
-        for r in ivf_assign(e, _ivf_centroids(e)).select("vec_id", "cluster").collect()
+        for r in ivf_assign(e, ivf_centroids(e)).select("vec_id", "cluster").collect()
     }
     want_ivf = {k: v for k, v in brute.items() if cluster[k[0]] == cluster[k[1]]}
     assert ivf == want_ivf
@@ -247,9 +250,9 @@ def test_jaccard_pairs_exact_equals_naive_inverted_index(spark, sf_dir):
         jaccard_pairs_exact,
         word_shingles,
     )
-    from npm_mirror_spark.queries import _docs_with_dups
+    from npm_mirror_spark.faces import docs_with_dups
 
-    docs = _docs_with_dups(spark, sf_dir)
+    docs = docs_with_dups(spark, sf_dir)
     ex = docs.select(
         "doc_id",
         F.explode(F.array_distinct(word_shingles("text", 3))).alias("__sh"),

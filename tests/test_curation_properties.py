@@ -126,7 +126,7 @@ def test_banded_pairs_equals_naive_enumeration(spark):
 
     from pyspark.sql import functions as F
 
-    from npm_mirror_spark.queries import _banded_pairs
+    from npm_mirror_spark.faces import banded_pairs
 
     rng = random.Random(42)
     rows = [
@@ -138,7 +138,7 @@ def test_banded_pairs_equals_naive_enumeration(spark):
     b = df.select(F.col("id").alias("id_b"), F.col("lang").alias("__lb"))
     got = {
         (r["id_a"], r["id_b"])
-        for r in _banded_pairs(a, b, width=20, extra_keys=[("__la", "__lb")])
+        for r in banded_pairs(a, b, width=20, extra_keys=[("__la", "__lb")])
         .select("id_a", "id_b")
         .collect()
     }
@@ -152,7 +152,7 @@ def test_banded_pairs_equals_naive_enumeration(spark):
     # and once more at a width that divides ids exactly (boundary stress)
     got10 = {
         (r["id_a"], r["id_b"])
-        for r in _banded_pairs(a, b, width=10, extra_keys=[("__la", "__lb")])
+        for r in banded_pairs(a, b, width=10, extra_keys=[("__la", "__lb")])
         .select("id_a", "id_b")
         .collect()
     }

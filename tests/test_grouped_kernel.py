@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from npm_mirror_spark.faces.relational import q_centroids
 from npm_mirror_spark.operators.similarity import grouped_centroids_pandas
-from npm_mirror_spark.queries import q_centroids
 
 
 def test_grouped_pandas_centroids_match_declarative(spark, sf_dir):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from npm_mirror_spark.faces import ORDER
 from npm_mirror_spark.queries import ORACLES, QUERIES
 from npm_mirror_spark.registry import all_faces
 from tests.oracle_harness import compare, duckdb_con
@@ -14,6 +13,11 @@ from tests.oracle_harness import compare, duckdb_con
 FACES = {name: (q, sql) for name, q, sql in all_faces()}
 ORACLE_BACKED = sorted(n for n, (_, sql) in FACES.items() if sql)
 ROWS_ONLY = sorted(n for n, (_, sql) in FACES.items() if not sql)
+
+#: Oracle-backed faces with an empty result at the default test scale,
+#: sf0.001: the TPC-H Q7 shape finds no trade between its two nations
+#: there (14 rows at sf0.01, where the driver checks it).
+EMPTY_AT_SF0001 = {"q_nation_volume"}
 
 
 @pytest.fixture(scope="module")
@@ -28,8 +32,8 @@ def test_oracle_parity(spark, sf_dir, con, qname):
     q, sql = FACES[qname]
     problems = compare(q(spark, sf_dir), con, sql)
     assert not problems, f"{qname}: " + "; ".join(problems)
-    if qname in ORDER:
-        # a family face must not match its oracle on an empty result
+    if qname not in EMPTY_AT_SF0001:
+        # a face must not match its oracle on an empty result
         assert con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0] > 0, qname
 
 

@@ -299,8 +299,9 @@ def test_all_faces_lists_registered_then_staged():
 
 
 def test_family_faces_merge_into_registry():
-    """Each registered family entry is in QUERIES / ORACLES with its face
-    and resolved oracle; each staged one reaches all_faces() only."""
+    """Each registered family entry is in QUERIES with its face and in
+    ORACLES with its resolved oracle (absent for a rows-only face); each
+    staged one reaches all_faces() only."""
     from npm_mirror_spark import faces
     from npm_mirror_spark.registry import all_faces
 
@@ -310,7 +311,7 @@ def test_family_faces_merge_into_registry():
         if e.staged:
             assert staged[e.name] == (e.face, sql) and e.name not in QUERIES, e.name
         else:
-            assert QUERIES[e.name] is e.face and ORACLES[e.name] == sql, e.name
+            assert QUERIES[e.name] is e.face and ORACLES.get(e.name) == sql, e.name
 
 
 def test_merge_raises_on_a_name_defined_twice():
@@ -320,13 +321,13 @@ def test_merge_raises_on_a_name_defined_twice():
         return None
 
     cases = [
-        ({"q_a": f}, {}, [Face("q_a", f, None, False)]),  # vs the literal
-        ({}, {}, [Face("q_a", f, "SELECT 1", True), Face("q_a", f, None, True)]),
-        ({}, {}, [Face("q_a", f, None, True), Face("q_a", f, None, False)]),
+        [Face("q_a", f, None, False), Face("q_a", f, "SELECT 1", False)],
+        [Face("q_a", f, "SELECT 1", True), Face("q_a", f, None, True)],
+        [Face("q_a", f, None, True), Face("q_a", f, None, False)],
     ]
-    for queries, oracles, entries in cases:
+    for entries in cases:
         with pytest.raises(ValueError, match="'q_a' is defined twice"):
-            merge(queries, oracles, entries)
+            merge(entries)
 
 
 def test_resolve_face_matches_registry():

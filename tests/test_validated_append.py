@@ -107,7 +107,8 @@ def test_grouped_report_agrees_with_gate_decisions(spark, tmp_path, sf_dir):
     must route each batch exactly as grouped_constraint_report's
     relational verdict says."""
     from npm_mirror_spark.operators.dedup import md5_key64
-    from npm_mirror_spark.queries import QUERIES, _t
+    from npm_mirror_spark.queries import QUERIES
+    from npm_mirror_spark.tables import load_table as _t
 
     verdicts = {
         r["batch_id"]: r["route"]
