@@ -5,14 +5,3 @@ Every operator is a pure function usable under both ``spark.read`` and
 side effects live behind ``foreachBatch``/``mapInPandas`` seams in
 ``npm_mirror_spark.streaming``; nothing here touches the network or disk.
 """
-
-from npm_mirror_spark.operators import (  # noqa: F401
-    aggregates,
-    dedup,
-    filters,
-    joins,
-    multimodal,
-    projections,
-    similarity,
-    text,
-)

@@ -70,6 +70,7 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "5min")
         # local-mode niceties; harmless on a cluster
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

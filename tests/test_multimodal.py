@@ -256,17 +256,11 @@ def test_jpeg_codec_rejects_unsupported_and_truncation():
     with pytest.raises(ValueError, match="bad SOI"):
         mm.decode_jpeg(b"\x89PNG not a jpeg")
     good = mm.encode_jpeg(np.arange(64, dtype=np.uint8).reshape(8, 8))
-    # flip SOF0 -> SOF2: dispatches to the progressive decoder, where a
-    # baseline-scripted scan (Ss=0, Se=63) is malformed — still the F9
-    # ValueError, never a crash
+    # flip SOF0 -> SOF2 (progressive) or SOF3 (lossless): rejected
     i = good.index(b"\xff\xc0")
-    prog = good[:i] + b"\xff\xc2" + good[i + 2 :]
-    with pytest.raises(ValueError, match="DC scan with nonzero Se"):
-        mm.decode_jpeg(prog)
-    # progressive-exclusive SOF codes stay rejected
-    lossless = good[:i] + b"\xff\xc3" + good[i + 2 :]
-    with pytest.raises(ValueError, match="SOF0 / progressive SOF2"):
-        mm.decode_jpeg(lossless)
+    for sof in (b"\xff\xc2", b"\xff\xc3"):
+        with pytest.raises(ValueError, match="only baseline SOF0"):
+            mm.decode_jpeg(good[:i] + sof + good[i + 2 :])
     # claim 3 components in SOF0 (color)
     colorish = bytearray(good)
     colorish[i + 9] = 3
@@ -615,199 +609,6 @@ def test_wav_features_kernel(spark):
     assert abs(r["rms"] - 1000.0) < 1e-9
 
 
-def _prog_test_image(kind):
-    import numpy as np
-
-    h, w = 41, 53
-    y, x = np.mgrid[0:h, 0:w]
-    g = ((x * 4 + y * 3) % 256).astype(np.uint8)
-    if kind == "gray":
-        return g
-    if kind == "rgb":
-        return np.stack([g, 255 - g, (x * 7 % 256)], axis=-1).astype(np.uint8)
-    rng = np.random.default_rng(7)
-    return rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-
-
-def test_progressive_jpeg_decodes_bit_identical_to_baseline():
-    """The load-bearing cross-check: progressive encode -> decode must
-    equal BASELINE encode -> decode pixel-for-pixel (both paths share
-    the identical quantized coefficients; only the entropy layout
-    differs), for grayscale, 4:4:4 and 4:2:0 — the 4:2:0 face covers
-    interleaved multi-block-per-MCU DC scans and per-component
-    non-interleaved AC extents."""
-    import numpy as np
-
-    for kind, sub in [
-        ("gray", None), ("rgb", "444"), ("rgb", "420"),
-        ("noise", "444"), ("noise", "420"),
-    ]:
-        a = _prog_test_image(kind)
-        if a.ndim == 2:
-            base = mm.decode_jpeg(mm.encode_jpeg(a))
-            prog = mm.decode_jpeg(mm.encode_jpeg_progressive(a))
-        else:
-            base = mm.decode_jpeg(mm.encode_jpeg(a, subsampling=sub))
-            prog = mm.decode_jpeg(
-                mm.encode_jpeg_progressive(a, subsampling=sub)
-            )
-        assert np.array_equal(base, prog), (kind, sub)
-
-
-def test_progressive_stream_is_really_multiscan():
-    """Structural pin: the emitted stream is SOF2 with the full scan
-    script (10 SOS segments for color: DC + 4 AC + DC refine + 4 AC
-    refine), not a relabeled baseline."""
-    import struct
-
-    def sos_headers(raw):
-        """Walk segments (skipping entropy data like the decoder does)
-        and return each SOS's (ns, Ss, Se, Ah, Al)."""
-        pos, out, markers = 2, [], []
-        while pos + 2 <= len(raw):
-            assert raw[pos] == 0xFF
-            marker = raw[pos + 1]
-            if marker == 0xD9:
-                break
-            (seglen,) = struct.unpack(">H", raw[pos + 2 : pos + 4])
-            payload = raw[pos + 4 : pos + 2 + seglen]
-            markers.append(marker)
-            pos += 2 + seglen
-            if marker == 0xDA:
-                ns = payload[0]
-                ss, se, a = payload[1 + 2 * ns : 4 + 2 * ns]
-                out.append((ns, ss, se, a >> 4, a & 0x0F))
-                while pos + 1 < len(raw):  # skip entropy to next marker
-                    if raw[pos] == 0xFF and raw[pos + 1] not in (0x00,) and not (
-                        0xD0 <= raw[pos + 1] <= 0xD7
-                    ):
-                        break
-                    pos += 1
-        return out, markers
-
-    raw = mm.encode_jpeg_progressive(_prog_test_image("rgb"), subsampling="444")
-    scans, markers = sos_headers(raw)
-    assert 0xC2 in markers and 0xC0 not in markers
-    assert scans == [
-        (3, 0, 0, 0, 1),               # interleaved DC first
-        (1, 1, 5, 0, 1), (1, 6, 63, 0, 1),   # Y spectral bands
-        (1, 1, 5, 0, 1), (1, 6, 63, 0, 1),   # Cb
-        (1, 1, 5, 0, 1), (1, 6, 63, 0, 1),   # Cr
-        (3, 0, 0, 1, 0),               # DC refinement
-        (1, 1, 5, 1, 0), (1, 6, 63, 1, 0),
-        (1, 1, 5, 1, 0), (1, 6, 63, 1, 0),
-        (1, 1, 5, 1, 0), (1, 6, 63, 1, 0),
-    ]
-    gray_scans, _ = sos_headers(mm.encode_jpeg_progressive(_prog_test_image("gray")))
-    assert len(gray_scans) == 6  # DC + 2 AC bands + the 3 refinements
-
-
-def test_progressive_eob_runs_across_blocks():
-    """A flat image makes every AC band empty -> the AC scans are pure
-    multi-block EOB runs (EOBn symbols with extra bits), the path a
-    single-block EOB0 stream never touches."""
-    import numpy as np
-
-    a = np.full((64, 64), 120, dtype=np.uint8)  # 64 blocks, all DC-only
-    raw = mm.encode_jpeg_progressive(a)
-    out = mm.decode_jpeg(raw)
-    assert np.array_equal(out, mm.decode_jpeg(mm.encode_jpeg(a)))
-    # the whole 64-block AC band collapses into very few entropy bytes
-    assert len(raw) < 900
-
-
-def test_progressive_truncation_raises_valueerror_only():
-    """F9 contract for the multi-scan parser: every truncation raises
-    ValueError (never struct/Index/KeyError)."""
-    import numpy as np
-    import pytest
-
-    raw = mm.encode_jpeg_progressive(
-        np.arange(256, dtype=np.uint8).reshape(16, 16)
-    )
-    full = mm.decode_jpeg(raw)
-    for cut in range(2, len(raw), 3):
-        try:
-            out = mm.decode_jpeg(raw[:cut])
-        except ValueError:
-            continue
-        # losing only the EOI tail can still decode fully
-        assert out.shape == full.shape, f"cut at {cut} mis-decoded"
-
-
-def test_progressive_blob_through_feature_kernel(spark):
-    """decode_image sniffs JFIF and now transparently handles SOF2: a
-    progressive blob in the media column yields true decoded dims
-    through the same mapInPandas seam as baseline/PNG blobs."""
-    import numpy as np
-
-    a = _prog_test_image("rgb")
-    rows = [
-        (1, bytearray(mm.encode_jpeg_progressive(a, subsampling="420")), None),
-        (2, bytearray(mm.encode_jpeg(a, subsampling="444")), None),
-    ]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    got = {
-        r["media_id"]: (r["width"], r["height"])
-        for r in mm.image_features(media).collect()
-    }
-    assert got == {1: (53, 41), 2: (53, 41)}
-
-
-def test_progressive_restart_intervals_bit_identical():
-    """DRI + RSTn in every progressive scan (DC preds, EOB runs and
-    buffered correction bits flushed at each boundary): decode stays
-    bit-identical to baseline for gray/444/420 at several intervals."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (37, 45, 3), dtype=np.uint8)
-    for sub in ("444", "420"):
-        base = mm.decode_jpeg(mm.encode_jpeg(img, subsampling=sub))
-        for ri in (1, 2, 5):
-            raw = mm.encode_jpeg_progressive(
-                img, subsampling=sub, restart_interval=ri
-            )
-            assert any(
-                bytes([0xFF, 0xD0 + i]) in raw for i in range(8)
-            ), "restart markers must actually be emitted"
-            assert np.array_equal(base, mm.decode_jpeg(raw)), (sub, ri)
-    g = rng.integers(0, 256, (16, 16), dtype=np.uint8)
-    assert np.array_equal(
-        mm.decode_jpeg(mm.encode_jpeg(g)),
-        mm.decode_jpeg(mm.encode_jpeg_progressive(g, restart_interval=1)),
-    )
-
-
-def test_progressive_randomized_soak_cross_layout():
-    """Seeded mini-soak across random geometry (down to 1x1), content
-    class, subsampling and restart interval: progressive decode must be
-    bit-identical to baseline decode in every configuration (a 120-case
-    sweep of this generator passed during r6; this keeps a fast seeded
-    slice of it in CI)."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    for _ in range(20):
-        h = int(rng.integers(1, 70))
-        w = int(rng.integers(1, 70))
-        gray = bool(rng.integers(0, 2))
-        sub = rng.choice(["444", "420"])
-        ri = int(rng.choice([0, 2, 7]))
-        a = rng.integers(0, 256, (h, w) if gray else (h, w, 3), dtype=np.uint8)
-        if gray:
-            base = mm.decode_jpeg(mm.encode_jpeg(a))
-            prog = mm.decode_jpeg(
-                mm.encode_jpeg_progressive(a, restart_interval=ri)
-            )
-        else:
-            base = mm.decode_jpeg(mm.encode_jpeg(a, subsampling=sub))
-            prog = mm.decode_jpeg(
-                mm.encode_jpeg_progressive(a, subsampling=sub, restart_interval=ri)
-            )
-        assert np.array_equal(base, prog), (h, w, gray, sub, ri)
-
-
 def _pad_jpeg_markers(raw: bytes) -> bytes:
     """Insert two 0xFF fill bytes before every marker (legal per T.81
     B.1.1.2) — entropy-coded data and RST markers are copied verbatim."""
@@ -839,19 +640,15 @@ def _pad_jpeg_markers(raw: bytes) -> bytes:
 
 def test_jpeg_fill_bytes_before_markers_are_skipped():
     """r6 advice finding: optional 0xFF fill bytes before a marker are
-    legal (T.81 B.1.1.2); padded baseline AND progressive streams must
-    decode bit-identically to their unpadded originals instead of
-    raising 'marker sync lost'."""
+    legal (T.81 B.1.1.2); a padded stream must decode bit-identically to
+    its unpadded original instead of raising 'marker sync lost'."""
     import numpy as np
 
-    a = _prog_test_image("rgb")
-    for label, raw in [
-        ("baseline", mm.encode_jpeg(a, subsampling="444")),
-        ("progressive", mm.encode_jpeg_progressive(a, subsampling="420")),
-    ]:
-        want = mm.decode_jpeg(raw)
-        got = mm.decode_jpeg(_pad_jpeg_markers(raw))
-        assert np.array_equal(want, got), label
+    y, x = np.mgrid[0:41, 0:53]
+    g = ((x * 4 + y * 3) % 256).astype(np.uint8)
+    a = np.stack([g, 255 - g, (x * 7 % 256)], axis=-1).astype(np.uint8)
+    raw = mm.encode_jpeg(a, subsampling="444")
+    assert np.array_equal(mm.decode_jpeg(raw), mm.decode_jpeg(_pad_jpeg_markers(raw)))
 
 
 # ----------------------------------------------------------------- GIF

@@ -5,10 +5,16 @@ fallback)."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from npm_mirror_spark import plans
 from npm_mirror_spark.queries import QUERIES
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="module")
@@ -920,3 +926,21 @@ def test_bfs_rounds_are_equi_joins_on_cached_edges(q):
     assert "InMemoryTableScan" in text or "InMemoryRelation" in text
     assert "CartesianProduct" not in text
     assert "SortMergeJoin LeftAnti" in text or "LeftAnti" in text
+
+
+def test_plans_md_matches_the_code(tmp_path):
+    """docs/PLANS.md is what ``tools/face.py dump`` writes for the current
+    code. The dump runs in its own process, because it needs its fixed
+    ``local[4]`` session: the plans differ at other parallelisms."""
+    out = tmp_path / "PLANS.md"
+    code = "import sys; from tools.face import plans_markdown as p; open(sys.argv[1], 'w').write(p())"
+    run = subprocess.run(
+        [sys.executable, "-c", code, str(out)],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    committed = (REPO / "docs" / "PLANS.md").read_bytes()
+    assert out.read_bytes() == committed, "docs/PLANS.md is stale: run `python tools/face.py dump`"

@@ -29,7 +29,8 @@ then the last run's stages by executor task time.
 property that matters at scale, to docs/PLANS.md on a fixed ``local[4]``
 session with 8 shuffle partitions, so the generated file does not depend on
 the host.
-Run it after changing any operator.
+Run it after changing any operator: ``tests/test_plans.py`` fails while the
+committed file differs from a fresh dump.
 """
 
 from __future__ import annotations
@@ -208,8 +209,9 @@ SHOW = {
 DUMP_SF_DIR = f"{TESTDATA}/sf0.01"
 
 
-def dump() -> None:
-    """Regenerate docs/PLANS.md from the ``SHOW`` faces' plans at ``DUMP_SF_DIR``."""
+def plans_markdown() -> str:
+    """The text of docs/PLANS.md: the ``SHOW`` faces' plans at ``DUMP_SF_DIR``
+    on a fixed ``local[4]`` session with 8 shuffle partitions."""
     from npm_mirror_spark import plans
     from npm_mirror_spark.registry import resolve_face
     from npm_mirror_spark.session import get_spark
@@ -245,10 +247,16 @@ def dump() -> None:
                 "exchange reuse computes once)"
             )
         out += [f"## {name}", "", f"*{note}*", "", "```", tree.strip(), "", scans.strip(), "```", ""]
-    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote docs/PLANS.md")
     spark.stop()
+    return "\n".join(out)
+
+
+def dump() -> None:
+    """Regenerate docs/PLANS.md."""
+    text = plans_markdown()
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
+        f.write(text)
+    print("wrote docs/PLANS.md")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -286,6 +294,7 @@ def main(argv: list[str] | None = None) -> int:
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.driver.memory", "8g")
             .config("spark.ui.enabled", "false")
+            .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )
         queries, oracles = entry.queries(), entry.oracle_sql()
