@@ -79,12 +79,12 @@ def upsert_latest(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    mode_was = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        latest.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode_was)
+    (
+        latest.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
 
 def drop_committed(
@@ -157,15 +157,11 @@ def compact_partitions(spark, path: str, partition_col: str) -> None:
     hot partitions keep appending meanwhile — dynamic overwrite means
     compacting old partitions never races the writer appending new ones.
     """
-    df = spark.read.parquet(path)
-    mode_was = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", mode_was)
+    (
+        spark.read.parquet(path)
+        .repartition(F.col(partition_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )

@@ -33,10 +33,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from npm_mirror_spark.operators.projections import mirror_record
+from npm_mirror_spark.schema import MIRROR_SCHEMA
 from npm_mirror_spark.sinks import drop_committed, path_exists
 from npm_mirror_spark.sources.changes import MAX_SIZE, read_changes_stream
 
@@ -97,7 +98,9 @@ class MirrorPipeline:
     # -- batch-visible state --------------------------------------------
 
     def mirror_table(self) -> DataFrame:
-        return self.spark.read.parquet(self.mirror_path)
+        # the declared schema is what mirror_record writes, so the read
+        # needs no footer job to infer it
+        return self.spark.read.schema(MIRROR_SCHEMA).parquet(self.mirror_path)
 
     def stage_log(self, stage: str) -> DataFrame:
         # partition-pruned read of one stage "topic"
@@ -113,21 +116,47 @@ class MirrorPipeline:
         """One micro-batch: dedup + fan-out. Runs as ordinary batch code —
         every operator above is stream/batch pure, so this is the ONLY
         stream-specific code in the pipeline."""
+        # persisted so every action below reads the batch once: the
+        # stream's observe("mirror_metrics") then counts each row once
         routed = routed.persist()
         cached = None
         try:
+            # a sink's committed set, probed before any write: None for a
+            # sink not written yet, which needs no cross-batch dedup
+            store = self.artifact_store
+            mirror_seqs = (
+                self.mirror_table()
+                if path_exists(self.spark, self.mirror_path)
+                else None
+            )
+            store_seqs = store.committed_seqs() if store is not None else None
+
             # stage logs (the 5 Kafka topics, K2): ONE partitioned write —
             # each stage becomes a partition dir, no per-stage job, no
             # driver-side stage enumeration (was: collect + N filtered
-            # writes = N extra passes over the batch)
+            # writes = N extra passes over the batch). When a committed
+            # set exists, the same pass observes the batch's min mirror
+            # seq, the lower bound of sinks.drop_committed, so the bound
+            # costs no job of its own.
+            logged = routed
+            min_obs = None
+            if mirror_seqs is not None or store_seqs is not None:
+                min_obs = Observation("batch_min_seq")
+                logged = routed.observe(
+                    min_obs,
+                    F.min(
+                        F.when(F.col("stage") == "added_to_db", F.col("seq"))
+                    ).alias("min_seq"),
+                )
             (
-                routed.select(
+                logged.select(
                     "seq", "id", "skip_reason", F.lit(batch_id).alias("batch_id"), "stage"
                 )
                 .write.mode("append")
                 .partitionBy("stage")
                 .parquet(self.stages_path)
             )
+            min_seq = min_obs.get["min_seq"] if min_obs is not None else None
 
             # effectively-once rows: in-batch dedup on seq (redelivery
             # inside a batch), then each sink drops the seqs it already
@@ -141,21 +170,11 @@ class MirrorPipeline:
             fresh = processed_mirror_records(routed).dropDuplicates(
                 ["change_seq_id"]
             )
-            store = self.artifact_store
-            mirror_seqs = (
-                self.mirror_table()
-                if path_exists(self.spark, self.mirror_path)
-                else None
-            )
-            store_seqs = store.committed_seqs() if store is not None else None
-            if mirror_seqs is not None or store is not None:
-                # cache only when a second consumer exists (min-agg below
-                # and/or the artifact projection) — an unconditional persist
-                # taxes the common fresh-sink fast path for nothing
+            if store is not None:
+                # the artifact projection reads ``fresh`` a second time;
+                # with the mirror as its only reader it stays uncached, so
+                # AQE can coalesce the dedup shuffle into the mirror write
                 fresh = cached = fresh.persist()
-            min_seq = None
-            if mirror_seqs is not None or store_seqs is not None:
-                min_seq = fresh.agg(F.min("change_seq_id")).first()[0]
             records = drop_committed(fresh, mirror_seqs, "change_seq_id", min_seq)
             records.write.mode("append").parquet(self.mirror_path)
 

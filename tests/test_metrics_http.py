@@ -16,11 +16,18 @@ from npm_mirror_spark.streaming.pipeline import MetricsListener, MirrorPipeline
 
 
 @pytest.fixture(scope="module")
-def drained_listener(spark, tmp_path_factory):
+def drain(spark, tmp_path_factory):
+    """One drain of redelivered and malformed lines: (listener, pipeline,
+    delivered line count)."""
     d = tmp_path_factory.mktemp("changes_metrics")
+    lines = 0
     with open(d / "changes.jsonl", "w") as f:
-        for c in ch.generate_changes(n=120, seed=11):
+        for i, c in enumerate(ch.generate_changes(n=120, seed=11, redelivery_rate=0.05)):
             f.write(json.dumps(c) + "\n")
+            lines += 1
+            if i % 40 == 0:
+                f.write("{not json\n")
+                lines += 1
     listener = MetricsListener().attach(spark)
     try:
         p = MirrorPipeline(spark, str(tmp_path_factory.mktemp("out_metrics")))
@@ -31,9 +38,14 @@ def drained_listener(spark, tmp_path_factory):
         while listener.last_seq is None and time.time() < deadline:
             time.sleep(0.1)
         assert listener.last_seq is not None, "progress event never delivered"
-        yield listener
+        yield listener, p, lines
     finally:
         listener.detach(spark)
+
+
+@pytest.fixture(scope="module")
+def drained_listener(drain):
+    return drain[0]
 
 
 def _scrape(url: str):
@@ -68,7 +80,14 @@ def test_scrape_after_drain(drained_listener):
         assert _value(body, "request_processing_seconds_count") == float(
             len(drained_listener.batch_durations_ms)
         )
-        assert drained_listener.n_changes > 0
+
+
+def test_counters_count_each_delivered_line_once(drain):
+    """observe() sits upstream of a batch that runs several actions; the
+    counters must still count each delivered line once."""
+    listener, p, lines = drain
+    assert listener.n_changes == lines
+    assert listener.n_skipped == p.stage_log("skipped_changes").count() > 0
 
 
 def test_unknown_path_404_and_help_lines(drained_listener):

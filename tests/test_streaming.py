@@ -4,6 +4,8 @@ dedup-on-redelivery, malformed routing, retention invariant, metrics."""
 from __future__ import annotations
 
 import json
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +31,22 @@ def fixture_jsonl(tmp_path_factory):
             if i % 97 == 0:
                 f.write("{this is not json\n")
     return str(d)
+
+
+def _deliveries(fixture_jsonl, root):
+    """The fixture's lines as two deliveries, the second re-delivering the
+    first one's last 20 lines, so the second drains into an existing
+    mirror with real cross-batch dedup work."""
+    with open(os.path.join(fixture_jsonl, "changes.jsonl")) as f:
+        lines = f.readlines()
+    half = len(lines) // 2
+    dirs = []
+    for name, part in (("first", lines[:half]), ("second", lines[half - 20 :])):
+        d = root / name
+        d.mkdir()
+        (d / "changes.jsonl").write_text("".join(part))
+        dirs.append(str(d))
+    return dirs
 
 
 def test_generator_determinism():
@@ -82,12 +100,20 @@ def test_stream_batch_parity_and_dedup(spark, fixture_jsonl, tmp_path):
         before = sp.mirror_table().count()
         sp.run_available_now(fixture_jsonl)
         assert sp.mirror_table().count() == before
+
+        # observe() counts each delivered line once, redelivered and
+        # malformed ones included, however many actions the batch runs;
+        # listener events arrive on an async bus, so wait for them
+        with open(os.path.join(fixture_jsonl, "changes.jsonl")) as f:
+            delivered = len(f.readlines())
+        deadline = time.time() + 30
+        while listener.n_changes < delivered and time.time() < deadline:
+            time.sleep(0.1)
     finally:
         listener.detach(spark)
 
-    # observe() metrics reached the listener
-    assert listener.n_changes > 0
-    assert listener.n_skipped > 0
+    assert listener.n_changes == delivered
+    assert listener.n_skipped == sp.stage_log("skipped_changes").count() > 0
     assert listener.last_seq is not None
     assert listener.lag(listener.last_seq + 200) == 200
 
@@ -183,6 +209,57 @@ def test_mirror_read_failure_fails_batch_not_dedup(spark, fixture_jsonl, tmp_pat
     p = MirrorPipeline(spark, str(out))
     with pytest.raises(Exception):
         p.run_batch(fixture_jsonl)
+
+
+@pytest.mark.parametrize("with_artifacts, max_jobs", [(False, 4), (True, 9)])
+def test_batch_into_existing_mirror_job_count(
+    spark, fixture_jsonl, tmp_path, with_artifacts, max_jobs
+):
+    """The dedup bound is observed during the stage-log write and the
+    mirror is read with its declared schema, so a batch into an existing
+    mirror runs no min-agg and no schema-inference job (8 jobs, and 12
+    with the artifact store, before either)."""
+    first, second = _deliveries(fixture_jsonl, tmp_path)
+    p = MirrorPipeline(spark, str(tmp_path / "out"), with_artifacts=with_artifacts)
+    p.run_batch(first)
+    before = p.mirror_table().count()
+
+    sc = spark.sparkContext
+    group = f"existing_mirror_batch.{with_artifacts}"
+    sc.setJobGroup(group, group)
+    try:
+        p.run_batch(second)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+
+    # the second delivery's redelivered lines are not stored again
+    seqs = [r["change_seq_id"] for r in p.mirror_table().collect()]
+    assert len(seqs) == len(set(seqs)) > before
+
+
+@pytest.mark.parametrize("content", ["", "{this is not json\n[1, 2\n"])
+def test_batch_without_mirror_rows_into_existing_mirror(
+    spark, fixture_jsonl, tmp_path, content
+):
+    """A batch with no mirror rows (an empty delivery, or one that holds
+    only malformed lines) observes a NULL min seq: it must return and
+    leave both sinks unchanged."""
+    p = MirrorPipeline(spark, str(tmp_path / "out"), with_artifacts=True)
+    p.run_batch(fixture_jsonl)
+    before = p.mirror_table().count()
+    stored = p.artifact_store.read().count()
+    logged = p.stage_log("skipped_changes").count()
+
+    src = tmp_path / "nothing_new"
+    src.mkdir()
+    (src / "changes.jsonl").write_text(content)
+    p.run_batch(str(src))
+    assert p.mirror_table().count() == before
+    assert p.artifact_store.read().count() == stored
+    assert p.stage_log("skipped_changes").count() == logged + content.count("\n")
 
 
 def test_skipped_stage_log_contents(spark, fixture_jsonl, tmp_path):
@@ -287,7 +364,11 @@ def test_mirror_schema_matches_contract(spark, fixture_jsonl):
 
     routed = route_changes(ch.read_changes_batch(spark, fixture_jsonl))
     rec = processed_mirror_records(routed)
-    assert [f.name for f in rec.schema.fields] == [f.name for f in MIRROR_SCHEMA.fields]
+    # mirror_table() reads with MIRROR_SCHEMA instead of inferring it, so
+    # the written types must be the declared ones, field by field
+    assert [(f.name, f.dataType) for f in rec.schema.fields] == [
+        (f.name, f.dataType) for f in MIRROR_SCHEMA.fields
+    ]
     # value-keyed map lookup: missing dist_tags.latest -> NULL, not error (P2/P4)
     assert rec.filter(F.col("package_latest_version").isNull()).count() >= 0
     rows = rec.limit(5).collect()
