@@ -138,13 +138,16 @@ def normalize_metadata(parsed: DataFrame) -> DataFrame:
 # -- P1-P4: the 13-field mirror-record projection -----------------------------
 
 
-def mirror_record(changes: DataFrame) -> DataFrame:
+def mirror_record(changes: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """THE flagship operator: flatten a nested change document into the
-    13-field mirror record (changes_consumer.py:283-329, schema §1.3).
+    13-field mirror record (changes_consumer.py:283-329, schema §1.3),
+    after the ``keep`` columns carried through unchanged.
 
-    Pure ``select`` over nested fields — Catalyst prunes the untouched
-    branches of ``doc`` out of the parquet/JSON scan, so at 100 TB this reads
-    only the bytes it projects. The value-keyed map lookup
+    Pure ``select`` over nested fields. Over a parquet or JSON-file scan
+    Catalyst prunes the untouched branches of ``doc`` out of the read;
+    ``from_json`` over a text or Kafka value is NOT pruned — it builds
+    its whole schema — so the mirror pipeline parses with only the
+    fields read here and by routing (``schema.PIPELINE_CHANGE_SCHEMA``). The value-keyed map lookup
     (``versions[dist_tags['latest']]``, changes_consumer.py:288) is
     ``element_at`` and is null-safe: missing key -> NULL, exactly the
     reference's probed-``.get()`` behavior.
@@ -153,6 +156,7 @@ def mirror_record(changes: DataFrame) -> DataFrame:
     latest = doc["dist_tags"]["latest"]
     latest_ver = F.element_at(doc["versions"], latest)
     return changes.select(
+        *keep,
         F.col("id").alias("package_name"),
         F.col("seq").alias("change_seq_id"),
         doc["_rev"].alias("package_revision_id"),

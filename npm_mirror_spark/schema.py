@@ -7,6 +7,7 @@ changes_consumer.py:129,294-299). We declare the shape once and parse with
 probed maps become null-safe ``MapType`` lookups.
 
 CHANGE_SCHEMA models one row of the NPM ``_changes`` feed (FIXTURES.md §A);
+PIPELINE_CHANGE_SCHEMA is the part of it the mirror pipeline reads;
 MIRROR_SCHEMA is the 13-field flat record the reference's consumer builds at
 changes_consumer.py:310-324.
 """
@@ -72,6 +73,38 @@ CHANGE_SCHEMA = StructType(
         StructField("doc", DOC_SCHEMA),
         StructField("artifact_size", LongType()),
         StructField("fetch_status", IntegerType()),
+    ]
+)
+
+# what the mirror pipeline's sinks read (route_changes + mirror_record):
+# CHANGE_SCHEMA without doc._id, doc.name and every version's dist.
+# from_json builds every field it is given and Catalyst does not prune
+# its schema, so the pipeline parses with this narrower one. Readers that
+# need the rest (enrichment.latest_tarball_urls reads dist.tarball,
+# normalize_metadata reads doc.name and doc._id) keep CHANGE_SCHEMA.
+PIPELINE_CHANGE_SCHEMA = StructType(
+    [
+        *(CHANGE_SCHEMA[n] for n in ("seq", "id", "deleted")),
+        StructField(
+            "doc",
+            StructType(
+                [
+                    DOC_SCHEMA["_rev"],
+                    DOC_SCHEMA["dist_tags"],
+                    StructField(
+                        "versions",
+                        MapType(
+                            StringType(),
+                            StructType(
+                                [f for f in VERSION_SCHEMA.fields if f.name != "dist"]
+                            ),
+                        ),
+                    ),
+                    DOC_SCHEMA["time"],
+                ]
+            ),
+        ),
+        *(CHANGE_SCHEMA[n] for n in ("artifact_size", "fetch_status")),
     ]
 )
 

@@ -14,6 +14,13 @@ stream/batch parity is then a property of the plan, not of two codepaths.
 In production the line source would be Kafka
 (``spark.readStream.format("kafka")``, SURVEY.md §2.1 S2); the file
 source here is plan-compatible (both yield a ``value: string`` column).
+
+The parse keeps only the typed change: ``from_json`` builds every field
+of its schema for every line, whether or not a query reads it (Catalyst
+prunes nested columns out of a parquet or JSON-file scan, not out of a
+``from_json`` over a text or Kafka value). The readers default to the
+full ``CHANGE_SCHEMA``; the mirror pipeline passes
+``PIPELINE_CHANGE_SCHEMA``, the part its sinks read.
 """
 
 from __future__ import annotations
@@ -25,6 +32,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from npm_mirror_spark.schema import CHANGE_SCHEMA
 
@@ -118,24 +126,30 @@ def write_jsonl(changes: list[dict], path: str) -> str:
     return path
 
 
-def parse_changes(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """JSON line -> typed change row (S3). PERMISSIVE: malformed lines
-    yield a null struct and are routed, not fatal (F9,
-    changes_consumer.py:393-405). Works identically on batch and
-    streaming inputs."""
+def parse_changes(
+    raw: DataFrame, value_col: str = "value", schema: StructType = CHANGE_SCHEMA
+) -> DataFrame:
+    """JSON line -> typed change row (S3), one column per field of
+    ``schema``. PERMISSIVE: malformed lines yield a null struct and are
+    routed, not fatal (F9, changes_consumer.py:393-405). Works identically
+    on batch and streaming inputs."""
     parsed = raw.select(
-        F.from_json(F.col(value_col), CHANGE_SCHEMA, {"mode": "PERMISSIVE"}).alias("c"),
-        F.col(value_col).alias("_raw"),
+        F.from_json(F.col(value_col), schema, {"mode": "PERMISSIVE"}).alias("c")
     )
-    return parsed.select("c.*", "_raw")
+    return parsed.select("c.*")
 
 
-def read_changes_batch(spark: SparkSession, path: str) -> DataFrame:
-    return parse_changes(spark.read.text(path))
+def read_changes_batch(
+    spark: SparkSession, path: str, schema: StructType = CHANGE_SCHEMA
+) -> DataFrame:
+    return parse_changes(spark.read.text(path), schema=schema)
 
 
 def read_changes_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int | None = None,
+    schema: StructType = CHANGE_SCHEMA,
 ) -> DataFrame:
     """File-replay streaming source (plan-compatible with the Kafka source:
     both produce a string ``value``). ``maxFilesPerTrigger`` models
@@ -143,7 +157,7 @@ def read_changes_stream(
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return parse_changes(reader.text(path))
+    return parse_changes(reader.text(path), schema=schema)
 
 
 def read_changes_kafka(

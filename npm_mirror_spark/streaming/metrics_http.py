@@ -115,13 +115,12 @@ class MetricsServer:
         # REQUEST_TIME Summary analog (changes_consumer.py:38): batch
         # durations as a summary (sum in seconds + count), the same two
         # series prometheus_client's Summary exports
-        ms = l.batch_durations_ms
         out.append(
             "# HELP request_processing_seconds Time spent processing request"
         )
         out.append("# TYPE request_processing_seconds summary")
-        out.append(f"request_processing_seconds_count {len(ms)}")
-        out.append(f"request_processing_seconds_sum {sum(ms) / 1000.0}")
+        out.append(f"request_processing_seconds_count {l.n_batches}")
+        out.append(f"request_processing_seconds_sum {l.batch_ms_sum / 1000.0}")
         return "\n".join(out) + "\n"
 
     # -- lifecycle -------------------------------------------------------

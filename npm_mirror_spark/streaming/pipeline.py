@@ -7,6 +7,7 @@ micro-batch:
   reference                              here
   ---------                              ----
   poll + json.loads (L376,391)           file/Kafka source + from_json
+                                         (only the fields read below)
   catch-all -> skipped_changes (L393)    PERMISSIVE corrupt routing (stage col)
   doc-missing / size / status filters    route_changes() predicates (F1,F2,F5)
   13-field projection + db.save (L283)   mirror_record() -> parquet append
@@ -37,9 +38,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from npm_mirror_spark.operators.projections import mirror_record
-from npm_mirror_spark.schema import MIRROR_SCHEMA
+from npm_mirror_spark.schema import MIRROR_SCHEMA, PIPELINE_CHANGE_SCHEMA
 from npm_mirror_spark.sinks import drop_committed, path_exists
-from npm_mirror_spark.sources.changes import MAX_SIZE, read_changes_stream
+from npm_mirror_spark.sources.changes import (
+    MAX_SIZE,
+    read_changes_batch,
+    read_changes_stream,
+)
 
 STAGES = (
     "downloaded_in_local",
@@ -70,13 +75,6 @@ def route_changes(parsed: DataFrame, max_size: int = MAX_SIZE) -> DataFrame:
             F.lit("added_to_db")
         ),
     )
-
-
-def processed_mirror_records(routed: DataFrame) -> DataFrame:
-    """The rows that survive routing, projected to the 13-field mirror
-    record — THE pipeline output (K3)."""
-    ok = routed.filter(F.col("stage") == "added_to_db")
-    return mirror_record(ok)
 
 
 class MirrorPipeline:
@@ -116,9 +114,14 @@ class MirrorPipeline:
         """One micro-batch: dedup + fan-out. Runs as ordinary batch code —
         every operator above is stream/batch pure, so this is the ONLY
         stream-specific code in the pipeline."""
-        # persisted so every action below reads the batch once: the
-        # stream's observe("mirror_metrics") then counts each row once
-        routed = routed.persist()
+        # what the sinks read, projected before the cache: the stage-log
+        # columns and the 13-field mirror record (K3) of every row, not
+        # the parsed doc. Persisted so every action below reads the batch
+        # once: the stream's observe("mirror_metrics") then counts each
+        # row once.
+        batch = mirror_record(
+            routed, keep=("seq", "id", "skip_reason", "stage")
+        ).persist()
         cached = None
         try:
             # a sink's committed set, probed before any write: None for a
@@ -138,11 +141,11 @@ class MirrorPipeline:
             # set exists, the same pass observes the batch's min mirror
             # seq, the lower bound of sinks.drop_committed, so the bound
             # costs no job of its own.
-            logged = routed
+            logged = batch
             min_obs = None
             if mirror_seqs is not None or store_seqs is not None:
                 min_obs = Observation("batch_min_seq")
-                logged = routed.observe(
+                logged = batch.observe(
                     min_obs,
                     F.min(
                         F.when(F.col("stage") == "added_to_db", F.col("seq"))
@@ -167,8 +170,10 @@ class MirrorPipeline:
             # write but before the artifact append leaves the rows
             # committed to the mirror, so the retried batch would anti-join
             # them away and their artifacts would never be written.
-            fresh = processed_mirror_records(routed).dropDuplicates(
-                ["change_seq_id"]
+            fresh = (
+                batch.filter(F.col("stage") == "added_to_db")
+                .select(*MIRROR_SCHEMA.fieldNames())
+                .dropDuplicates(["change_seq_id"])
             )
             if store is not None:
                 # the artifact projection reads ``fresh`` a second time;
@@ -195,14 +200,16 @@ class MirrorPipeline:
         finally:
             if cached is not None:
                 cached.unpersist()
-            routed.unpersist()
+            batch.unpersist()
 
     # -- drive ------------------------------------------------------------
 
     def run_available_now(self, source_path: str) -> None:
         """Drain-and-stop (the reference stream is unbounded; availableNow
         is the test/backfill trigger, SURVEY.md §2.7)."""
-        parsed = read_changes_stream(self.spark, source_path)
+        parsed = read_changes_stream(
+            self.spark, source_path, schema=PIPELINE_CHANGE_SCHEMA
+        )
         routed = route_changes(parsed)
         observed = routed.observe(
             "mirror_metrics",
@@ -228,10 +235,10 @@ class MirrorPipeline:
     def run_batch(self, source_path: str) -> None:
         """The same plan under spark.read — stream/batch parity by
         construction (one codebase, two triggers; SURVEY.md §3.3)."""
-        from npm_mirror_spark.sources.changes import read_changes_batch
-
-        routed = route_changes(read_changes_batch(self.spark, source_path))
-        self._write_batch(routed, batch_id=-1)
+        parsed = read_changes_batch(
+            self.spark, source_path, schema=PIPELINE_CHANGE_SCHEMA
+        )
+        self._write_batch(route_changes(parsed), batch_id=-1)
 
 
 def write_kafka_stream(
@@ -264,7 +271,8 @@ def write_kafka_stream(
 class MetricsListener:
     """StreamingQueryListener surfacing the reference's four Prometheus
     metrics (changes_consumer.py:38-42, producer.ts:111-115): processed
-    counter, skipped counter, last seq, plus per-batch duration — the
+    counter, skipped counter, last seq, plus the batch count and summed
+    batch duration (a summary's two series, so no per-batch state) — the
     monitoring-is-the-test-suite stance of the reference (SURVEY.md §5),
     exportable to any metrics backend from the driver."""
 
@@ -272,7 +280,8 @@ class MetricsListener:
         self.n_changes = 0
         self.n_skipped = 0
         self.last_seq: int | None = None
-        self.batch_durations_ms: list[int] = []
+        self.n_batches = 0
+        self.batch_ms_sum = 0
 
     def attach(self, spark: SparkSession) -> "MetricsListener":
         from pyspark.sql.streaming import StreamingQueryListener
@@ -292,7 +301,8 @@ class MetricsListener:
                     if row["max_seq"] is not None:
                         outer.last_seq = max(outer.last_seq or 0, row["max_seq"])
                 if p.durationMs and "triggerExecution" in p.durationMs:
-                    outer.batch_durations_ms.append(p.durationMs["triggerExecution"])
+                    outer.n_batches += 1
+                    outer.batch_ms_sum += p.durationMs["triggerExecution"]
 
             def onQueryIdle(self, event):
                 pass

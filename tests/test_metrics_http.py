@@ -76,9 +76,13 @@ def test_scrape_after_drain(drained_listener):
             drained_listener.last_seq + 7
         )
         assert _value(body, "npmmirror_download_queue_length") == 0.0
-        # summary analog carries the batch durations
+        # summary analog carries the batch count and summed durations
         assert _value(body, "request_processing_seconds_count") == float(
-            len(drained_listener.batch_durations_ms)
+            drained_listener.n_batches
+        )
+        assert drained_listener.n_batches > 0
+        assert _value(body, "request_processing_seconds_sum") == (
+            drained_listener.batch_ms_sum / 1000.0
         )
 
 

@@ -20,6 +20,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from npm_mirror_spark.schema import CHANGE_SCHEMA, PIPELINE_CHANGE_SCHEMA
 from npm_mirror_spark.sources.changes import parse_changes
 
 _SETTINGS = dict(
@@ -42,9 +43,12 @@ _VALID_SEQS = st.lists(
 )
 
 
+@_pytest.mark.parametrize(
+    "schema", [CHANGE_SCHEMA, PIPELINE_CHANGE_SCHEMA], ids=["change", "pipeline"]
+)
 @settings(**_SETTINGS)
 @given(seqs=_VALID_SEQS, garbage=st.lists(_GARBAGE, min_size=0, max_size=10))
-def test_parser_conserves_rows_and_routes_malformed(spark, seqs, garbage):
+def test_parser_conserves_rows_and_routes_malformed(spark, schema, seqs, garbage):
     valid = [
         json.dumps(
             {"seq": s, "id": f"pkg{s}", "deleted": False, "doc": {"_id": f"pkg{s}"}}
@@ -53,7 +57,7 @@ def test_parser_conserves_rows_and_routes_malformed(spark, seqs, garbage):
     ]
     lines = valid + garbage
     raw = spark.createDataFrame([(l,) for l in lines], "value string")
-    out = parse_changes(raw).cache()
+    out = parse_changes(raw, schema=schema).cache()
     try:
         # row conservation: permissive mode never drops a line
         assert out.count() == len(lines)

@@ -358,14 +358,14 @@ def test_stream_static_broadcast_join(spark, fixture_jsonl, tmp_path):
     assert batch == len(rows)
 
 
-def test_mirror_schema_matches_contract(spark, fixture_jsonl):
+def test_mirror_schema_matches_contract(spark, fixture_jsonl, tmp_path):
     from npm_mirror_spark.schema import MIRROR_SCHEMA
-    from npm_mirror_spark.streaming.pipeline import processed_mirror_records
 
-    routed = route_changes(ch.read_changes_batch(spark, fixture_jsonl))
-    rec = processed_mirror_records(routed)
+    p = MirrorPipeline(spark, str(tmp_path / "out"))
+    p.run_batch(fixture_jsonl)
     # mirror_table() reads with MIRROR_SCHEMA instead of inferring it, so
     # the written types must be the declared ones, field by field
+    rec = spark.read.parquet(p.mirror_path)
     assert [(f.name, f.dataType) for f in rec.schema.fields] == [
         (f.name, f.dataType) for f in MIRROR_SCHEMA.fields
     ]
