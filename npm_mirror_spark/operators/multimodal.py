@@ -1,14 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The container has no codec LIBRARIES, but six formats get REAL codecs
+The container has no codec LIBRARIES, but five formats get REAL codecs
 here with zero extra deps: PNG (pure stdlib zlib/struct, all five scanline
 filters — see encode_png/decode_png), baseline JPEG — grayscale AND
 interleaved YCbCr color at 4:4:4/4:2:0/4:2:2 (stream-defined Huffman
-tables + matrix IDCT — see encode_jpeg/decode_jpeg), GIF87a/89a —
-full variable-width LZW, interlacing, local palettes, animation
-compositing with disposal + transparency (see encode_gif/decode_gif/
-decode_gif_frame/gif_info), Y4M video
+tables + matrix IDCT — see encode_jpeg/decode_jpeg), Y4M video
 (YUV4MPEG2 4:2:0/4:4:4/mono with O(1) frame seek — see y4m_info/
 decode_y4m_frame/sample_frames), RAW1 RGB, and PCM16 audio. Nothing is
 stubbed anymore: decode_image_stub/sample_frames_stub remain only as
@@ -1619,392 +1616,3 @@ def synthetic_y4m_media(spark, n: int = 4, frames: int = 8, w: int = 32, h: int 
             (i, bytearray(content), ("video", "y4m", len(content), w, h, dur))
         )
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-# -- GIF: palette-indexed COMPRESSED images/animation, pure stdlib ------------
-#
-# Third REAL compressed-image codec (after PNG and JPEG), zero extra
-# deps: GIF87a/89a with the full LZW variable-width code path (spec
-# Appendix F), interlaced row ordering, local and global palettes,
-# sub-rectangle frames, frame disposal 0/1/2 and GCE transparency —
-# which makes animated GIF the COMPRESSED multi-frame format next to
-# the uncompressed Y4M tier (same frame-sampling story, real entropy
-# coding).  The encoder emits spec-valid files for frames whose
-# combined palette has <= 256 exact colors (no quantizer — synthetic
-# fixtures are exact-palette by construction, the encode_jpeg
-# no-PIL-needed testing contract); disposal 3 (restore-previous) and
-# PLTE-less streams raise ValueError — the F9 error route.
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, expect: int) -> bytes:
-    """GIF LZW (LSB-first variable-width codes), returning exactly
-    ``expect`` palette indices; anything malformed raises ValueError."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, next_code, width, prev
-        table = [bytes([i]) for i in range(clear)] + [b"", b""]
-        next_code = end + 1
-        width = min_code_size + 1
-        prev = None
-
-    next_code = width = 0
-    prev: bytes | None = None
-    reset()
-    acc = nbits = 0
-    pos = 0
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            reset()
-            continue
-        if code == end:
-            break
-        if code < len(table) and (code < clear or code > end):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise ValueError(f"GIF LZW bad code {code}")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-        if len(out) > expect:
-            raise ValueError("GIF LZW overrun")
-    if len(out) != expect:
-        raise ValueError("GIF LZW pixel count mismatch")
-    return bytes(out)
-
-
-def _gif_lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF LZW encoder whose code width is driven by a SIMULATION of
-    the decoder's table growth — the decoder adds one entry per data
-    code after the first (one step behind the encoder's own adds, and
-    one step PAST them at the final flush), so deriving the width from
-    the encoder's own next_code desyncs exactly when the decoder's
-    post-final-code add crosses a power of two before END is read
-    (found by the constant-run roundtrip test)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-    width = min_code_size + 1
-    dec_next = end + 1  # the decoder's next table slot
-    n_data_codes = 0  # data codes emitted since the last clear
-
-    def emit(code: int):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def emit_data(code: int):
-        # after every data code except the first, the decoder adds a
-        # table entry and may widen — mirror that exactly
-        nonlocal width, dec_next, n_data_codes
-        emit(code)
-        n_data_codes += 1
-        if n_data_codes >= 2 and dec_next < 4096:
-            dec_next += 1
-            if dec_next == (1 << width) and width < 12:
-                width += 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    emit(clear)
-    w = b""
-    for k in indices:
-        wk = w + bytes([k])
-        if wk in table:
-            w = wk
-            continue
-        emit_data(table[w])
-        if next_code == 4096:
-            # table full: clear and restart (the decoder stopped
-            # adding at 4096 and resets on the clear)
-            emit(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = end + 1
-            width = min_code_size + 1
-            dec_next = end + 1
-            n_data_codes = 0
-        else:
-            table[wk] = next_code
-            next_code += 1
-        w = bytes([k])
-    if w:
-        emit_data(table[w])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_deinterlace_order(h: int) -> list:
-    rows = []
-    for start, step in _GIF_INTERLACE_PASSES:
-        rows.extend(range(start, h, step))
-    return rows
-
-
-def _gif_parse(b: bytes):
-    """Walk a GIF stream -> (version, W, H, gct, bg_index, frames);
-    each frame = (left, top, w, h, palette, indices, transparent_idx,
-    disposal).  Bounds-checked throughout (the decode_png contract)."""
-    import struct
-
-    if len(b) < 13 or b[:4] != b"GIF8" or b[4:6] not in (b"7a", b"9a"):
-        raise ValueError("not a GIF: bad signature")
-    version = b[3:6].decode()
-    w, h, flags, bg, _aspect = struct.unpack("<HHBBB", b[6:13])
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        if pos + 3 * n > len(b):
-            raise ValueError("GIF truncated global color table")
-        gct = b[pos : pos + 3 * n]
-        pos += 3 * n
-    frames = []
-    transparent = None
-    disposal = 0
-    while True:
-        if pos >= len(b):
-            raise ValueError("GIF missing trailer")
-        block = b[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            if pos + 1 > len(b):
-                raise ValueError("GIF truncated extension")
-            label = b[pos]
-            pos += 1
-            if label == 0xF9:
-                if pos + 6 > len(b) or b[pos] != 4:
-                    raise ValueError("GIF bad graphic control block")
-                packed = b[pos + 1]
-                disposal = (packed >> 2) & 0x07
-                transparent = b[pos + 4] if packed & 0x01 else None
-                pos += 5
-                if b[pos] != 0:
-                    raise ValueError("GIF unterminated graphic control")
-                pos += 1
-            else:
-                # skip any other extension's sub-blocks
-                while True:
-                    if pos >= len(b):
-                        raise ValueError("GIF truncated extension data")
-                    n = b[pos]
-                    pos += 1
-                    if n == 0:
-                        break
-                    pos += n
-            continue
-        if block != 0x2C:
-            raise ValueError(f"GIF unknown block 0x{block:02x}")
-        if pos + 9 > len(b):
-            raise ValueError("GIF truncated image descriptor")
-        left, top, fw, fh, iflags = struct.unpack("<HHHHB", b[pos : pos + 9])
-        pos += 9
-        pal = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 0x07)
-            if pos + 3 * n > len(b):
-                raise ValueError("GIF truncated local color table")
-            pal = b[pos : pos + 3 * n]
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF frame has no color table")
-        if pos >= len(b):
-            raise ValueError("GIF truncated LZW header")
-        mcs = b[pos]
-        pos += 1
-        if not 2 <= mcs <= 11:
-            raise ValueError(f"GIF bad LZW min code size {mcs}")
-        data = bytearray()
-        while True:
-            if pos >= len(b):
-                raise ValueError("GIF truncated image data")
-            n = b[pos]
-            pos += 1
-            if n == 0:
-                break
-            if pos + n > len(b):
-                raise ValueError("GIF truncated image sub-block")
-            data += b[pos : pos + n]
-            pos += n
-        idx = _gif_lzw_decode(bytes(data), mcs, fw * fh)
-        if iflags & 0x40:  # interlaced: reorder stream rows
-            import numpy as np
-
-            arr = np.frombuffer(idx, dtype=np.uint8).reshape(fh, fw)
-            out = np.zeros_like(arr)
-            out[_gif_deinterlace_order(fh)] = arr
-            idx = out.tobytes()
-        frames.append((left, top, fw, fh, pal, idx, transparent, disposal))
-        transparent = None
-        disposal = 0
-    if not frames:
-        raise ValueError("GIF has no image data")
-    return version, w, h, gct, bg, frames
-
-
-def gif_info(content: bytes) -> dict:
-    """Cheap metadata probe: version, canvas size, frame count."""
-    version, w, h, _gct, _bg, frames = _gif_parse(bytes(content))
-    return {
-        "version": version,
-        "width": w,
-        "height": h,
-        "n_frames": len(frames),
-    }
-
-
-def decode_gif_frame(content: bytes, frame_idx: int = 0):
-    """GIF bytes -> composited frame ``frame_idx`` as (H, W, 3) uint8
-    RGB over the logical canvas: frames draw their sub-rectangles in
-    order with GCE transparency respected; disposal 0/1 keep the
-    canvas, 2 restores the background over the frame's rect; 3
-    (restore-previous) raises ValueError."""
-    import numpy as np
-
-    version, w, h, gct, bg, frames = _gif_parse(bytes(content))
-    if not 0 <= frame_idx < len(frames):
-        raise ValueError(
-            f"GIF frame {frame_idx} out of range ({len(frames)} frames)"
-        )
-    if gct is not None:
-        gpal = np.frombuffer(gct, dtype=np.uint8).reshape(-1, 3)
-        bg_rgb = gpal[bg] if bg < len(gpal) else np.zeros(3, np.uint8)
-    else:
-        bg_rgb = np.zeros(3, np.uint8)
-    canvas = np.tile(bg_rgb, (h, w, 1)).astype(np.uint8)
-    for f, (left, top, fw, fh, pal, idx, transparent, disposal) in enumerate(
-        frames[: frame_idx + 1]
-    ):
-        if disposal == 3:
-            raise ValueError("GIF disposal 3 (restore previous) unsupported")
-        if left + fw > w or top + fh > h:
-            raise ValueError("GIF frame rect exceeds canvas")
-        p = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
-        a = np.frombuffer(idx, dtype=np.uint8).reshape(fh, fw)
-        if a.max(initial=0) >= len(p):
-            raise ValueError("GIF index outside color table")
-        rgb = p[a]
-        region = canvas[top : top + fh, left : left + fw]
-        if transparent is not None:
-            mask = (a != transparent)[..., None]
-            region[:] = np.where(mask, rgb, region)
-        else:
-            region[:] = rgb
-        if disposal == 2 and f < frame_idx:
-            canvas[top : top + fh, left : left + fw] = bg_rgb
-    return canvas
-
-
-def decode_gif(content: bytes):
-    """GIF bytes -> first composited frame, (H, W, 3) uint8 RGB —
-    the image-features entry point (gif_image_features)."""
-    return decode_gif_frame(content, 0)
-
-
-def encode_gif(
-    frames,
-    delay_cs: int = 4,
-    interlaced: bool = False,
-    transparent_rgb=None,
-) -> bytes:
-    """(H, W, 3) uint8 frame or list of frames -> spec-valid GIF89a.
-
-    Exact-palette encoder (the encode_jpeg testing contract: real
-    fixtures without PIL): the union of colors across frames must fit
-    256 entries or this raises.  Multi-frame inputs become an animated
-    stream of full-canvas frames with disposal 1;
-    ``transparent_rgb``, when given, marks that palette entry
-    transparent in every frame's GCE.
-    """
-    import struct
-
-    import numpy as np
-
-    if not isinstance(frames, (list, tuple)):
-        frames = [frames]
-    frames = [np.asarray(f, dtype=np.uint8) for f in frames]
-    h, w = frames[0].shape[:2]
-    for f in frames:
-        if f.shape != (h, w, 3):
-            raise ValueError("encode_gif: all frames must be (H, W, 3)")
-    colors = np.unique(
-        np.concatenate([f.reshape(-1, 3) for f in frames]), axis=0
-    )
-    if len(colors) > 256:
-        raise ValueError(
-            f"encode_gif: {len(colors)} distinct colors > 256 "
-            "(exact-palette encoder, no quantizer)"
-        )
-    # palette size = power of two >= max(2, n_colors)
-    bits = 1
-    while (1 << bits) < len(colors):
-        bits += 1
-    pal = np.zeros((1 << bits, 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    lut = {tuple(c): i for i, c in enumerate(colors)}
-    transparent_idx = (
-        lut.get(tuple(transparent_rgb)) if transparent_rgb is not None else None
-    )
-    if transparent_rgb is not None and transparent_idx is None:
-        raise ValueError("encode_gif: transparent_rgb not in palette")
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) & 0x07), 0, 0)
-    out += pal.tobytes()
-    mcs = max(2, bits)
-    for f in frames:
-        packed = (1 << 2) | (0 if transparent_idx is None else 1)
-        out += b"\x21\xf9\x04" + bytes([packed])
-        out += struct.pack("<H", delay_cs)
-        out += bytes([transparent_idx or 0, 0])
-        out += b"\x2c" + struct.pack(
-            "<HHHHB", 0, 0, w, h, 0x40 if interlaced else 0
-        )
-        idx = np.array(
-            [lut[tuple(px)] for px in f.reshape(-1, 3)], dtype=np.uint8
-        ).reshape(h, w)
-        if interlaced:
-            idx = idx[_gif_deinterlace_order(h)]
-        out += bytes([mcs])
-        lzw = _gif_lzw_encode(idx.tobytes(), mcs)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def gif_image_features(media: DataFrame) -> DataFrame:
-    """REAL image feature extraction over GIF blobs — strict face (any
-    non-GIF byte string raises, the F9 error route); dimensions are the
-    LOGICAL CANVAS of the composited first frame."""
-    return _real_codec_features(media, "decode_gif")

@@ -59,14 +59,16 @@ def route_changes(parsed: DataFrame, max_size: int = MAX_SIZE) -> DataFrame:
     """Tag each change with its terminal stage (K2 fan-out).
 
     skip reasons mirror the reference: malformed JSON (F9), missing doc
-    (F1), failed fetch (F5), oversize artifact (F2/F4 — doc+tarball drop
-    as one row). Everything else lands in the mirror table (added_to_db).
+    (F1), failed fetch (F5: any ``fetch_status`` but an integer 200,
+    including a missing or non-integer one, which parses to NULL),
+    oversize artifact (F2/F4 — doc+tarball drop as one row). Everything
+    else lands in the mirror table (added_to_db).
     """
     return parsed.withColumn(
         "skip_reason",
         F.when(F.col("seq").isNull(), F.lit("malformed"))
         .when(F.col("doc").isNull(), F.lit("missing_doc"))
-        .when(F.col("fetch_status") != 200, F.lit("fetch_failed"))
+        .when(~F.col("fetch_status").eqNullSafe(200), F.lit("fetch_failed"))
         .when(F.col("artifact_size") > max_size, F.lit("oversize"))
         .otherwise(F.lit(None)),
     ).withColumn(

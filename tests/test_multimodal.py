@@ -649,241 +649,3 @@ def test_jpeg_fill_bytes_before_markers_are_skipped():
     a = np.stack([g, 255 - g, (x * 7 % 256)], axis=-1).astype(np.uint8)
     raw = mm.encode_jpeg(a, subsampling="444")
     assert np.array_equal(mm.decode_jpeg(raw), mm.decode_jpeg(_pad_jpeg_markers(raw)))
-
-
-# ----------------------------------------------------------------- GIF
-
-
-def _rng_palette_frame(h, w, ncolors, seed):
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, size=(ncolors, 3), dtype=np.uint8)
-    idx = rng.randint(0, ncolors, size=(h, w))
-    return pal[idx]
-
-
-def test_gif_roundtrip_exact(spark):
-    from npm_mirror_spark.operators.multimodal import decode_gif, encode_gif
-
-    img = _rng_palette_frame(23, 17, 13, seed=7)
-    assert (decode_gif(encode_gif(img)) == img).all()
-
-
-def test_gif_roundtrip_interlaced(spark):
-    from npm_mirror_spark.operators.multimodal import decode_gif, encode_gif
-
-    img = _rng_palette_frame(31, 9, 5, seed=3)
-    assert (decode_gif(encode_gif(img, interlaced=True)) == img).all()
-
-
-def test_gif_lzw_width_growth_and_reset(spark):
-    """Enough distinct pixel transitions to push the LZW table past
-    several width bumps (and with a tiny palette, past the 12-bit
-    clear/reset handshake on a big enough image)."""
-    import numpy as np
-
-    from npm_mirror_spark.operators.multimodal import decode_gif, encode_gif
-
-    rng = np.random.RandomState(11)
-    pal = rng.randint(0, 256, size=(4, 3), dtype=np.uint8)
-    idx = rng.randint(0, 4, size=(120, 100))
-    img = pal[idx]
-    assert (decode_gif(encode_gif(img)) == img).all()
-
-
-def test_gif_animation_frames_and_info(spark):
-    import numpy as np
-
-    from npm_mirror_spark.operators.multimodal import (
-        decode_gif_frame,
-        encode_gif,
-        gif_info,
-    )
-
-    f0 = np.zeros((8, 8, 3), dtype=np.uint8)
-    f1 = f0.copy()
-    f1[2:5, 2:5] = (255, 0, 0)
-    f2 = f1.copy()
-    f2[0, :] = (0, 255, 0)
-    blob = encode_gif([f0, f1, f2])
-    info = gif_info(blob)
-    assert (info["version"], info["n_frames"]) == ("89a", 3)
-    assert (info["width"], info["height"]) == (8, 8)
-    assert (decode_gif_frame(blob, 0) == f0).all()
-    assert (decode_gif_frame(blob, 1) == f1).all()
-    assert (decode_gif_frame(blob, 2) == f2).all()
-
-
-def test_gif_transparency_composites_over_prior_frame(spark):
-    """Frame 2's transparent pixels must show frame 1 underneath."""
-    import numpy as np
-
-    from npm_mirror_spark.operators.multimodal import (
-        decode_gif_frame,
-        encode_gif,
-    )
-
-    base = np.full((6, 6, 3), (10, 20, 30), dtype=np.uint8)
-    overlay = np.full((6, 6, 3), (1, 1, 1), dtype=np.uint8)  # transparent key
-    overlay[3, 3] = (200, 100, 50)
-    blob = encode_gif([base, overlay], transparent_rgb=(1, 1, 1))
-    got = decode_gif_frame(blob, 1)
-    assert tuple(got[3, 3]) == (200, 100, 50)
-    assert tuple(got[0, 0]) == (10, 20, 30)  # shows through
-
-
-def test_gif_error_routes(spark):
-    import pytest as _pytest
-
-    from npm_mirror_spark.operators.multimodal import decode_gif, encode_gif
-
-    with _pytest.raises(ValueError, match="bad signature"):
-        decode_gif(b"NOTAGIF" + b"\x00" * 20)
-    blob = encode_gif(_rng_palette_frame(5, 5, 3, seed=1))
-    with _pytest.raises(ValueError):
-        decode_gif(blob[:-10])  # truncated
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    too_many = rng.randint(0, 256, size=(32, 32, 3), dtype=np.uint8)
-    # 1024 pixels of random 24-bit color: certainly > 256 distinct
-    with _pytest.raises(ValueError, match="distinct colors"):
-        encode_gif(too_many)
-
-
-def test_gif_image_features_kernel(spark):
-    """The mapInPandas feature kernel over real GIF blobs: true canvas
-    dims come back; a None row follows the None-content convention."""
-    import hashlib
-
-    from npm_mirror_spark.operators.multimodal import (
-        encode_gif,
-        gif_image_features,
-    )
-
-    blob = encode_gif(_rng_palette_frame(12, 34, 7, seed=9))
-    media = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, None)],
-        "media_id long, content binary",
-    )
-    rows = {r["media_id"]: r for r in gif_image_features(media).collect()}
-    assert (rows[1]["width"], rows[1]["height"]) == (34, 12)
-    assert rows[1]["sha256"] == hashlib.sha256(blob).hexdigest()
-    assert rows[2]["sha256"] is None and rows[2]["width"] == 0
-
-
-def test_gif_lzw_roundtrip_property(spark):
-    """Hypothesis adversary for the LZW pair — constant runs, ramps
-    and random mixes, including inputs long enough to cross several
-    code-width bumps (the final-flush width desync this caught once)."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from npm_mirror_spark.operators.multimodal import (
-        _gif_lzw_decode,
-        _gif_lzw_encode,
-    )
-
-    @given(
-        st.one_of(
-            st.builds(
-                lambda sym, n: bytes([sym]) * n,
-                st.integers(0, 3),
-                st.integers(1, 400),
-            ),
-            st.binary(min_size=1, max_size=400).map(
-                lambda b: bytes(x % 4 for x in b)
-            ),
-        )
-    )
-    @settings(
-        max_examples=40,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    def check(data):
-        assert _gif_lzw_decode(_gif_lzw_encode(data, 2), 2, len(data)) == data
-
-    check()
-
-
-def test_gif_subrect_frame_with_local_palette(spark):
-    """Decoder paths the exact-palette encoder never emits: a second
-    frame covering only a sub-rectangle, carrying its own LOCAL color
-    table — hand-assembled from the codec's own building blocks."""
-    import struct
-
-    import numpy as np
-
-    from npm_mirror_spark.operators.multimodal import (
-        _gif_lzw_encode,
-        decode_gif_frame,
-        gif_info,
-    )
-
-    # canvas 6x6, global palette: [blue, white]
-    gct = bytes([0, 0, 255, 255, 255, 255]) + bytes(6)  # padded to 4
-    out = bytearray()
-    out += b"GIF89a" + struct.pack("<HHBBB", 6, 6, 0x80 | 0x01, 0, 0) + gct
-    # frame 1: full canvas, all index 0 (blue), global palette
-    idx1 = bytes(36 * [0])
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, 6, 6, 0)
-    lzw = _gif_lzw_encode(idx1, 2)
-    out += bytes([2, len(lzw)]) + lzw + b"\x00"
-    # frame 2: 2x2 sub-rect at (3, 1) with a LOCAL palette [red, green]
-    lct = bytes([255, 0, 0, 0, 255, 0]) + bytes(6)
-    out += b"\x2c" + struct.pack("<HHHHB", 3, 1, 2, 2, 0x80 | 0x01) + lct
-    idx2 = bytes([0, 1, 1, 0])
-    lzw = _gif_lzw_encode(idx2, 2)
-    out += bytes([2, len(lzw)]) + lzw + b"\x00"
-    out += b"\x3b"
-    blob = bytes(out)
-    assert gif_info(blob)["n_frames"] == 2
-    f0 = decode_gif_frame(blob, 0)
-    assert (f0 == np.array([0, 0, 255], np.uint8)).all()
-    f1 = decode_gif_frame(blob, 1)
-    # sub-rect columns 3-4, rows 1-2 use the LOCAL palette
-    assert tuple(f1[1, 3]) == (255, 0, 0)
-    assert tuple(f1[1, 4]) == (0, 255, 0)
-    assert tuple(f1[2, 3]) == (0, 255, 0)
-    assert tuple(f1[2, 4]) == (255, 0, 0)
-    # everything outside the rect still shows frame 1's blue
-    assert tuple(f1[0, 0]) == (0, 0, 255)
-    assert tuple(f1[5, 5]) == (0, 0, 255)
-
-
-def test_gif_disposal_2_restores_background(spark):
-    """A frame with disposal 2 is wiped back to the background color
-    before the next frame composites."""
-    import struct
-
-    import numpy as np
-
-    from npm_mirror_spark.operators.multimodal import (
-        _gif_lzw_encode,
-        decode_gif_frame,
-    )
-
-    # palette: [black(bg), red, green]; canvas 4x4, bg index 0
-    gct = bytes([0, 0, 0, 255, 0, 0, 0, 255, 0]) + bytes(3)
-    out = bytearray()
-    out += b"GIF89a" + struct.pack("<HHBBB", 4, 4, 0x80 | 0x01, 0, 0) + gct
-    # frame 1: all red, disposal 2 (restore to background)
-    out += b"\x21\xf9\x04" + bytes([2 << 2]) + struct.pack("<H", 4) + b"\x00\x00"
-    lzw = _gif_lzw_encode(bytes(16 * [1]), 2)
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, 4, 4, 0)
-    out += bytes([2, len(lzw)]) + lzw + b"\x00"
-    # frame 2: single green pixel sub-rect at (1, 1)
-    lzw = _gif_lzw_encode(bytes([2]), 2)
-    out += b"\x2c" + struct.pack("<HHHHB", 1, 1, 1, 1, 0)
-    out += bytes([2, len(lzw)]) + lzw + b"\x00"
-    out += b"\x3b"
-    blob = bytes(out)
-    f0 = decode_gif_frame(blob, 0)
-    assert (f0 == np.array([255, 0, 0], np.uint8)).all()
-    f1 = decode_gif_frame(blob, 1)
-    assert tuple(f1[1, 1]) == (0, 255, 0)
-    # the red frame was DISPOSED to background, not left underneath
-    assert tuple(f1[0, 0]) == (0, 0, 0)
-    assert tuple(f1[3, 3]) == (0, 0, 0)

@@ -354,3 +354,21 @@ def test_face_tool_checks_one_face(sf_dir):
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "q_mirror_record: ok" in proc.stdout
+
+
+def test_entry_points_do_not_load_the_codec_module():
+    """No entry point reaches operators/multimodal.py, which is what lets
+    its codecs be deleted without touching a face, sink or pipeline."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, __spark_entry__, bench, npm_mirror_spark.__main__, "
+        "npm_mirror_spark.streaming.pipeline, npm_mirror_spark.registry; "
+        "print('npm_mirror_spark.operators.multimodal' in sys.modules)"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == "False"

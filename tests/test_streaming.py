@@ -71,6 +71,35 @@ def test_parse_and_route_batch(spark, fixture_jsonl):
     assert {"malformed", "missing_doc", "fetch_failed", "oversize"} <= reasons
 
 
+def test_fetch_status_other_than_integer_200_is_fetch_failed(spark):
+    """F5: only an integer 200 is mirrored. A status that is missing or
+    not an integer parses to NULL, and NULL != 200 is NULL, so it must
+    not fall through to added_to_db."""
+    from npm_mirror_spark.schema import CHANGE_SCHEMA, PIPELINE_CHANGE_SCHEMA
+
+    statuses = {1: "500", 2: "404", 3: None, 4: "200", 5: 200}
+    lines = []
+    for seq, status in statuses.items():
+        change = {
+            "seq": seq,
+            "id": f"pkg{seq}",
+            "doc": {"_id": f"pkg{seq}", "versions": {}},
+            "artifact_size": 10,
+        }
+        if status is not None:
+            change["fetch_status"] = status
+        lines.append((json.dumps(change),))
+    raw = spark.createDataFrame(lines, "value string")
+    for schema in (CHANGE_SCHEMA, PIPELINE_CHANGE_SCHEMA):
+        routed = route_changes(ch.parse_changes(raw, schema=schema))
+        got = {
+            r["seq"]: (r["stage"], r["skip_reason"])
+            for r in routed.select("seq", "stage", "skip_reason").collect()
+        }
+        failed = ("skipped_changes", "fetch_failed")
+        assert got == {1: failed, 2: failed, 3: failed, 4: failed, 5: ("added_to_db", None)}
+
+
 def test_stream_batch_parity_and_dedup(spark, fixture_jsonl, tmp_path):
     stream_out = str(tmp_path / "stream_out")
     batch_out = str(tmp_path / "batch_out")
